@@ -793,6 +793,54 @@ def _agg_key(c: Call) -> tuple:
     return (c.fname, tuple(k(a) for a in c.args))
 
 
+def _agg_calls(stmt: Select) -> dict[tuple, Call]:
+    """The statement's distinct aggregate calls, in projection order."""
+    calls: list[Call] = []
+    for e, _ in stmt.projections:
+        _walk_calls(e, calls)
+    return {_agg_key(c): c for c in calls if c.fname in AGGS}
+
+
+@dataclass(frozen=True)
+class Route:
+    """A statement served from one tier table (``_plan_route``).
+    ``modulus`` is that table's bucket width: every WHERE time bound is
+    aligned to it, and the raw tail rolls up at it.  ``start``/``end`` are naive-UTC partition-prune bounds, a day wider
+    each side under tz().  ``tail`` is the tier watermark past which raw
+    points roll up on the fly (None: no raw tail); ``archive`` lets a
+    range with no committed partition fall back to the rollup_1m_counts
+    integer archive."""
+
+    family: str  # rollup | stitched | sumsq | ohlc | hist | hdr | kmv
+    table: str
+    modulus: int
+    start: Any
+    end: Any
+    tail: Any
+    archive: bool
+
+    def __str__(self) -> str:
+        tail = (
+            "no raw tail" if self.tail is None
+            else f"raw tail from {self.tail:%Y-%m-%d %H:%M:%S}"
+        )
+        archive = ", archive fallback" if self.archive else ""
+        return (
+            f"{self.family} — {self.table}, modulus {self.modulus}s, "
+            f"{tail}{archive}"
+        )
+
+
+@dataclass(frozen=True)
+class Raw:
+    """A statement the tiers cannot answer exactly, and the rule why."""
+
+    reason: str
+
+    def __str__(self) -> str:
+        return f"raw — {self.reason}"
+
+
 class InfluxQLEngine:
     """Executes InfluxQL SELECT strings over registered DataFrames.
 
@@ -811,6 +859,8 @@ class InfluxQLEngine:
         self.database = database
         self.databases: set[str] = {database}
         self._tz: str | None = None    # per-statement tz() zone (set by _run)
+        # tier routes planned for the current statement (EXPLAIN's route row)
+        self._routes: list[Route | Raw] = []
         # measurement → continuous-aggregate config (see register_tiered)
         self.tiered: dict[str, dict[str, Any]] = {}
         # continuous-query name → {"query": SELECT…INTO text,
@@ -971,20 +1021,23 @@ class InfluxQLEngine:
         raise InfluxQLError(f"unsupported expression {e!r}")
 
     def execute(self, sql: str) -> DataFrame:
+        self._routes = []
         first = sql.lstrip().split(None, 1)[0].upper() if sql.strip() else ""
         if first == "EXPLAIN":
             # InfluxQL EXPLAIN [ANALYZE] <select> — rendered honestly as
-            # the Spark physical plan (this engine's actual execution),
-            # one row per plan line; ANALYZE runs the query first and
-            # appends the row count
+            # the tier route(s) the statement planned, then the Spark
+            # physical plan (this engine's actual execution), one row per
+            # plan line; ANALYZE runs the query first and appends the row
+            # count
             rest = sql.lstrip()[7:].lstrip()
             analyze = rest[:7].upper() == "ANALYZE"
             if analyze:
                 rest = rest[7:].lstrip()
             df = self.execute(rest)
-            lines = (
-                df._jdf.queryExecution().executedPlan().toString().splitlines()
-            )
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            lines = plan.splitlines()
+            if self._routes:
+                lines.insert(0, f"route: {'; '.join(map(str, self._routes))}")
             if analyze:
                 lines.append(f"rows: {df.count()}")
             return self._spark().createDataFrame(
@@ -1027,7 +1080,7 @@ class InfluxQLEngine:
     def _run(self, stmt: Select) -> DataFrame:
         # Validate tz() once, up front: a bad zone name must be a loud,
         # named error (InfluxDB: "unable to find time zone"), not a
-        # ZoneInfoNotFoundError from _bounds_utc mid-planning or a Spark
+        # ZoneInfoNotFoundError from _plan_route mid-planning or a Spark
         # ZoneRulesException at collect time.
         if stmt.tz is not None:
             import zoneinfo as _zi
@@ -1126,16 +1179,19 @@ class InfluxQLEngine:
             if ta_root.fname in ASAP_FNS:
                 return self._exec_asap(stmt)
             return self._exec_fold(stmt, None)
-        if stmt.measurement in self.tiered and self._kmv_tier_answerable(stmt):
-            return self._exec_kmv_tiered(stmt)
-        if stmt.measurement in self.tiered and self._tiered_answerable(stmt):
-            return self._exec_tiered(stmt)
+        route = self._plan_route(stmt)
+        self._routes.append(route)
+        if isinstance(route, Route):
+            serve = {
+                "kmv": self._exec_kmv_tiered, "hdr": self._exec_hdr_percentiles,
+            }.get(route.family, self._exec_tiered)
+            return serve(stmt, route)
         if stmt.measurement not in self.tables:
             if stmt.measurement in self.tiered:
                 raise InfluxQLError(
                     f"measurement {stmt.measurement!r} is tier-only and this "
                     "query is not answerable from rollup partials (needs the "
-                    "raw table registered too)"
+                    f"raw table registered too): {route.reason}"
                 )
             raise InfluxQLError(f"unknown measurement {stmt.measurement!r}")
         df = self.tables[stmt.measurement]
@@ -1350,28 +1406,39 @@ class InfluxQLEngine:
 
         if stmt.time_width is not None:
             bucket = self._bucket(stmt.time_width, stmt.time_offset).alias("time")
-            grouped = df.groupBy(bucket, *keys).agg(*aggs)
-            if stmt.fill_mode != "none":
-                bounds = None
-                if stmt.where is not None:
-                    lo, hi = self._time_bounds(stmt.where)
-                    if lo is not None and hi is not None:
-                        bounds = self._aligned_bounds(
-                            lo, hi, stmt.time_width, stmt.time_offset
-                        )
-                grouped = fill_buckets(
-                    grouped, keys, list(aliases.values()),
-                    int(stmt.time_width),
-                    mode=stmt.fill_mode, fill_value=stmt.fill_value,
-                    bucket_col="time", spine_bounds=bounds,
-                    spine_tz=self._tz,
-                ).drop("filled")
+            grouped = self._fill(
+                stmt, df.groupBy(bucket, *keys).agg(*aggs), keys,
+                list(aliases.values()),
+            )
             frame_ts = "time"
         else:
             grouped = df.groupBy(*keys).agg(*aggs)
             frame_ts = None
 
         return self._agg_tail(stmt, grouped, keys, aliases, frame_ts, ts)
+
+    def _fill(
+        self, stmt: Select, grouped: DataFrame, keys: list[str],
+        cols: list[str],
+    ) -> DataFrame:
+        """GROUP BY time() fill() over the aggregated ``time`` frame; literal
+        WHERE time bounds pin the spine to the queried range, like
+        InfluxDB."""
+        if stmt.fill_mode == "none":
+            return grouped
+        lo, hi = (
+            self._time_bounds(stmt.where) if stmt.where is not None
+            else (None, None)
+        )
+        bounds = (
+            self._aligned_bounds(lo, hi, stmt.time_width, stmt.time_offset)
+            if lo is not None and hi is not None else None
+        )
+        return fill_buckets(
+            grouped, keys, cols, int(stmt.time_width),
+            mode=stmt.fill_mode, fill_value=stmt.fill_value,
+            bucket_col="time", spine_bounds=bounds, spine_tz=self._tz,
+        ).drop("filled")
 
     def _agg_tail(
         self,
@@ -1780,19 +1847,6 @@ class InfluxQLEngine:
 
     _TIER_AGGS = {"count", "sum", "mean", "min", "max", "spread"}
 
-    @staticmethod
-    def _serving_tier(w: int, off: int) -> str:
-        """Coarsest tier whose buckets divide BOTH the width and the
-        offset — with an offset, a tier bucket must never straddle an
-        output bucket (off=30m over a 1h width serves from 1m).  A tier
-        divides both iff it divides their gcd, so this is select_tier of
-        the gcd (gcd(w, 0) == w keeps the no-offset behavior)."""
-        import math as _math
-
-        from influxer_spark.query import select_tier
-
-        return select_tier(_math.gcd(w, off))
-
     def register_tiered(
         self,
         name: str,
@@ -1814,11 +1868,13 @@ class InfluxQLEngine:
         delegates this to the InfluxDB server).
 
         Routing is exact-only: count/sum/mean/min/max/spread over the tier's
-        value field, epoch-aligned widths and bounds, group tags ⊆ tier
-        keys.  Anything else silently falls back to the raw table registered
-        under the same name (or errors if there is none).  At 10^12-point
-        scale the rewrite reads O(buckets) instead of O(points) with
-        manifest-level partition pruning.
+        value field, whole-minute widths and offsets, WHERE time bounds
+        aligned to the serving table's buckets, group tags ⊆ tier keys.
+        Anything else falls back to the raw table registered under the same
+        name (or errors if there is none); ``EXPLAIN`` prints the route a
+        statement takes, or the rule that sent it to raw (``_plan_route``).
+        At 10^12-point scale the rewrite reads O(buckets) instead of
+        O(points) with manifest-level partition pruning.
 
         ``hist_bounds`` (the bound list the pipeline's ``hist_bounds=``
         materialized into the tiers) additionally opts percentile()/median()
@@ -1886,203 +1942,269 @@ class InfluxQLEngine:
             "as_of": as_of,
         }
 
-    def _archive_fallback(self, cfg, stmt, agg_calls, start, end):
-        """Cold-tier serving: when retention has expired every plain rollup
-        partition in range (and no raw table covers the range), count/sum/
-        mean GROUP BY time() statements are answered from the compressed
-        integer archive — rollup_1m_counts carries (cnt, sum_cents) blobs
-        per series (query.read_exact_rollup), so the dashboard keeps
-        working at decode cost instead of going dark.  min/max/spread/
-        percentile cannot be served (the archive stores no extremes or
-        cells) and fall through to the normal error.  sum/mean surface the
-        archive's exact integer cents as the engine's standard quantized
-        floats."""
-        from influxer_spark import query as _qapi
+    # --- tier routing: one planner, three executors ---
 
-        cat = cfg["catalog"]
-        if not cat.exists("rollup_1m_counts"):
-            return None
-        if any(
-            c.fname not in ("count", "sum", "mean")
-            for c in agg_calls.values()
-        ):
-            return None
-        try:
-            exact = _qapi.read_exact_rollup(
-                self._spark(), cat, 60, start, end,
-                key_cols=cfg["key_cols"], as_of=cfg.get("as_of"),
-            )
-        except ValueError:
-            return None
-        df = exact.select(
-            "bucket", *cfg["key_cols"], "cnt",
-            (F.col("sum_cents").cast("double") / F.lit(100.0)).alias("sum_v"),
-        )
-        if stmt.where is not None:
-            df = df.filter(InfluxQLEngine({}, ts_col="bucket")._cond(stmt.where))
-        return df
-
-    def _tiered_answerable(self, stmt: Select) -> bool:
+    def _plan_route(self, stmt: Select) -> Route | Raw:
+        """The one tier-routing decision: serve ``stmt`` from one table of
+        its measurement's tiers — which table, at which bucket width, over
+        which prune range, with or without the raw tail — or ``Raw`` with
+        the first rule that rules the tiers out.  Exact-only: every rule
+        keeps the tier answer equal to the raw one.  The route depends on
+        the statement, the registration and the committed catalog alone,
+        so EXPLAIN prints the route the executors then take.  KMV
+        statements plan before the aggregate families."""
         import datetime as _dt
 
-        cfg = self.tiered[stmt.measurement]
+        from influxer_spark import query as _qapi
+
+        cfg = self.tiered.get(stmt.measurement)
+        if cfg is None:
+            return Raw(f"measurement {stmt.measurement!r} is not tiered")
         if stmt.group_star:
-            # GROUP BY * expands from the RAW table's schema (it may name
-            # tags the tiers don't carry, e.g. lang) — expansion happens
-            # after routing, so serving the un-expanded statement from
-            # tiers would silently drop every tag.  Raw path only.
-            return False
+            # GROUP BY * expands from the RAW table's schema after routing
+            # (it may name tags the tiers don't carry, e.g. lang)
+            return Raw("GROUP BY * expands from the raw schema")
         if stmt.time_width is None:
-            return False
-        w = int(stmt.time_width)
-        if stmt.time_width != w or w % 60 != 0:
-            return False
-        # GROUP BY time(w, off): a minute-aligned offset tier-serves — the
-        # serving tier must divide BOTH w and off so no tier bucket
-        # straddles an output bucket (_serving_tier drops to 1m when the
-        # offset breaks the coarser grid); sub-minute offsets need raw
-        off = int(stmt.time_offset)
-        if stmt.time_offset != off or off % 60 != 0:
-            return False
-        tz_tier = None
-        if stmt.tz:
-            # tz() tier serving: UTC tier partials re-bucket on the zone's
-            # wall clock exactly when the zone's offset grid is compatible
-            # with a serving tier (_tz_grid_ok).  fill() IS servable since
-            # r5: fill_buckets' tz-aware spine drops only manufactured
-            # nonexistent wall labels (spring-forward hours) and keeps
-            # observed DST-gap boundary labels, so the tier path fills the
-            # identical wall spine the raw path does.  A bucket offset is
-            # servable too when the serving tier divides it
-            # (_tz_serving_tier requires wt | off): the shifted wall grid
-            # keeps every boundary wt-aligned, so no tier bucket straddles
-            # an output bucket — incompatible offsets yield tz_tier None
-            # and fall to raw.
-            tz_tier = self._tz_serving_tier(stmt)
-            if tz_tier is None:
-                return False
-        if not set(stmt.group_tags) <= set(cfg["key_cols"]):
-            return False
+            return Raw("no GROUP BY time()")
+        w, off = int(stmt.time_width), int(stmt.time_offset)
+        if stmt.time_width != w or w % 60:
+            return Raw(f"width {stmt.time_width:g}s is not whole minutes")
+        if stmt.time_offset != off or off % 60:
+            return Raw(f"offset {stmt.time_offset:g}s is not whole minutes")
+        extra = sorted(set(stmt.group_tags) - set(cfg["key_cols"]))
+        if extra:
+            return Raw(f"group tag {extra[0]!r} not in tier keys")
+        bounds = self._where_bounds(stmt, cfg["key_cols"])
+        if isinstance(bounds, Raw):
+            return bounds
+        lo, hi = bounds
+        tier = self._grid_tier(stmt, w, off, lo, hi)
+        if tier is None:
+            return Raw(f"tz({stmt.tz!r}) offsets fit no tier grid in range")
         calls: list[Call] = []
         for e, _ in stmt.projections:
             _walk_calls(e, calls)
+        family = (
+            self._kmv_family(stmt, cfg)
+            if any(c.fname == "approx_count_distinct" for c in calls)
+            else self._agg_family(stmt, cfg, calls, tier)
+        )
+        if isinstance(family, Raw):
+            return family
+        cat = cfg["catalog"]
+        if family in ("hdr", "kmv"):
+            # sketch tiers exist at 1h and 1d only; wall days under tz()
+            # are not UTC days, so those re-bucket the 1h tier
+            if tier == "1m":
+                return Raw(
+                    f"{family} tiers need hour-multiple widths, offsets and "
+                    "zone offsets"
+                )
+            if stmt.tz or not cat.exists(f"{family}_1d"):
+                tier = "1h"
+        # stitched and hist routes read the rollup tables
+        prefix = "rollup" if family in ("stitched", "hist") else family
+        table = f"{prefix}_{tier}"
+        if not cat.exists(table):
+            return Raw(f"no {table} table")
+        modulus = _qapi.TIER_SECONDS[tier]
+        for b in (lo, hi):
+            # a bound inside a bucket would need the points it summarizes
+            if b is not None and int(b.timestamp()) % modulus:
+                return Raw(
+                    f"time bound {b:%Y-%m-%d %H:%M:%S}Z cuts {table}'s "
+                    f"{modulus}s buckets"
+                )
+        has_raw = self.tables.get(stmt.measurement) is not None
+        if family == "sumsq" and has_raw:
+            # the range must end by the watermark: a float raw tail can't
+            # merge into exact integer power sums
+            wm = _qapi.tier_watermark(cat, tier, family=prefix)
+            if wm is None or hi is None or hi.replace(tzinfo=None) > wm:
+                return Raw(f"range passes the {table} watermark")
+        # prune bounds: naive UTC, widened a day each side under tz() so
+        # pruning never drops a partition the row-level WHERE still needs
+        pad = _dt.timedelta(days=1 if stmt.tz else 0)
+        start = lo.replace(tzinfo=None) - pad if lo else None
+        end = hi.replace(tzinfo=None) + pad if hi else None
+        tail = None
+        if family in ("rollup", "stitched", "ohlc") and has_raw and (
+            cfg["as_of"] is None
+        ):
+            # REAL-TIME tail (TimescaleDB real-time continuous aggregates):
+            # points past the tier watermark roll up from raw on the fly
+            wm = _qapi.tier_watermark(cat, tier, family=prefix)
+            if wm is None:
+                return Raw(f"no committed {table} partitions")
+            if end is None or end > wm:
+                tail = wm
+        # the integer archive re-buckets count/sum/mean on the UTC grid
+        archive = (
+            family in ("rollup", "stitched") and not off and not stmt.tz
+            and all(
+                c.fname in ("count", "sum", "mean")
+                for c in calls if c.fname in AGGS
+            )
+            and cat.exists("rollup_1m_counts")
+        )
+        return Route(family, table, modulus, start, end, tail, archive)
+
+    def _where_bounds(
+        self, stmt: Select, key_cols: tuple[str, ...]
+    ) -> tuple[Any, Any] | Raw:
+        """The WHERE's time range as aware-UTC ``(lo, hi)``, when a tier
+        frame can apply the WHERE: it names only time and tier keys, and
+        bounds time only by literal ``time >= lo`` / ``time < hi``.  Naive
+        literals are UTC, or wall-clock in the tz() zone (InfluxDB
+        semantics — the reading the compiled WHERE applies per row)."""
+        import datetime as _dt
+        import zoneinfo as _zi
+
+        if stmt.where is None:
+            return None, None
+
+        def refs(e: Any) -> set[str]:
+            if isinstance(e, Bool):
+                out: set[str] = set()
+                for p in e.parts:
+                    out |= refs(p)
+                return out
+            if isinstance(e, (Cmp, Bin)):
+                return refs(e.left) | refs(e.right)
+            if isinstance(e, Ref):
+                return {e.name}
+            return set()
+
+        extra = sorted(refs(stmt.where) - {"time", *key_cols})
+        if extra:
+            return Raw(f"WHERE names {extra[0]!r}, not a tier key")
+        parts = (
+            stmt.where.parts
+            if isinstance(stmt.where, Bool) and stmt.where.op == "and"
+            else [stmt.where]
+        )
+        # every conjunct naming time must be a bound _time_bounds captured
+        # (not one nested in an OR, reversed, or against a non-literal)
+        n_time = sum(1 for p in parts if "time" in refs(p))
+        lo, hi = self._time_bounds(stmt.where)
+        if n_time != (lo is not None) + (hi is not None):
+            return Raw("WHERE time condition is not a literal bound")
+        out = []
+        for bound, op_ok in ((lo, ">="), (hi, "<")):
+            if bound is None:
+                out.append(None)
+                continue
+            val, op = bound
+            if op != op_ok:
+                return Raw(f"time {op} bound (tiers need time >= and time <)")
+            try:
+                t = _dt.datetime.fromisoformat(val)
+            except ValueError:
+                return Raw(f"time literal {val!r} is not ISO 8601")
+            if t.tzinfo is None:
+                t = t.replace(
+                    tzinfo=_zi.ZoneInfo(stmt.tz) if stmt.tz
+                    else _dt.timezone.utc
+                )
+            out.append(t.astimezone(_dt.timezone.utc))
+        return out[0], out[1]
+
+    def _grid_tier(self, stmt: Select, w: int, off: int, lo, hi) -> str | None:
+        """Coarsest tier whose buckets nest in the output grid: its width
+        divides both the bucket width and the offset (off=30m over a 1h
+        width drops to 1m), and under tz() the zone's offsets and
+        transitions over [lo, hi) — 1970–2100 when unbounded — keep every
+        tier bucket inside one wall-clock bucket (``_tz_grid_ok``).
+        Without tz() the 1m tier always fits; under tz() None means no
+        tier does."""
+        from influxer_spark.query import TIER_SECONDS
+
+        lo_s = int(lo.timestamp()) if lo else 0
+        hi_s = int(hi.timestamp()) if hi else _TZ_HORIZON_END
+        for tier in ("1d", "1h", "1m"):
+            wt = TIER_SECONDS[tier]
+            if w % wt == 0 and off % wt == 0 and (
+                not stmt.tz or self._tz_grid_ok(stmt.tz, wt, lo_s, hi_s)
+            ):
+                return tier
+        return None
+
+    def _agg_family(
+        self, stmt: Select, cfg: dict, calls: list[Call], tier: str
+    ) -> str | Raw:
+        """Tier family of an aggregate statement.  Each registered family
+        serves a fixed set of aggregates over the tier's value field, and a
+        statement is served whole from ONE family's table: mixing sources
+        would forfeit single-read exactness."""
         aggish = [
             c for c in calls
             if c.fname in AGGS or c.fname in SELECTORS_MULTI
             or c.fname == "distinct"
         ]
         if not aggish:
-            return False
-        use_hdr = (
-            cfg.get("hdr")
-            and not cfg["hist_bounds"]
-            and any(c.fname in ("percentile", "median") for c in aggish)
-        )
-        if use_hdr:
-            # HDR serving is percentile-only (the hdr tables carry counter
-            # vectors, not companion sums) at hour-multiple widths.  Under
-            # tz() the 1h sketch tier serves iff the zone's offset grid is
-            # hour-compatible (tz_tier "1h", or "1d" for UTC-fixed zones —
-            # which implies hour alignment a fortiori); half-hour zones
-            # have no 1m sketch tier to drop to, so they stay raw.
-            if not all(c.fname in ("percentile", "median") for c in aggish):
-                return False
-            # hour-multiple widths AND offsets: the 1h sketch tier must
-            # divide both so no counter vector straddles a shifted (or
-            # wall-clock) output boundary
-            if (
-                w % 3600 != 0 or off % 3600 != 0
-                or not cfg["catalog"].exists("hdr_1h")
-            ):
-                return False
-            if stmt.tz and tz_tier not in ("1h", "1d"):
-                return False
+            return Raw("no aggregate")
+        names = {c.fname for c in aggish}
+        pct = names & {"percentile", "median"}
+        # bounds-free percentiles from the hdr sketch tiers; the exact-cell
+        # histogram path wins when hist_bounds is configured too
+        hdr = bool(pct) and cfg["hdr"] and not cfg["hist_bounds"]
         allowed = self._TIER_AGGS | (
-            {"percentile", "median"}
-            if (cfg["hist_bounds"] or use_hdr)
-            else set()
-        ) | ({"stddev"} if cfg.get("sumsq") else set()) | (
-            {"first", "last"} if cfg.get("ohlc") else set()
+            {"percentile", "median"} if cfg["hist_bounds"] or hdr else set()
+        ) | ({"stddev"} if cfg["sumsq"] else set()) | (
+            {"first", "last"} if cfg["ohlc"] else set()
         )
-        has_sd = any(c.fname == "stddev" for c in aggish)
-        has_fl = any(c.fname in ("first", "last") for c in aggish)
-        if has_fl:
-            # a first/last statement is served whole from the ohlc tier;
-            # sum/mean/stddev/percentile live on other tables — mixing
-            # sources would forfeit single-read exactness, so fall back
-            if not all(
-                c.fname in ("first", "last", "count", "min", "max", "spread")
-                for c in aggish
-            ):
-                return False
-            if not cfg["catalog"].exists(
-                f"ohlc_{tz_tier or self._serving_tier(w, off)}"
-            ):
-                return False
-        if has_sd:
-            # A stddev statement is served whole from the power-sum tier:
-            # histogram cells live on a different table, and a float raw
-            # tail can't merge into exact integer power sums — both cases
-            # fall back to the raw path (exact) rather than mix sources.
-            if any(c.fname in ("percentile", "median") for c in aggish):
-                return False
-            if self.tables.get(stmt.measurement) is not None:
-                import datetime as _dt2
-
-                tier = tz_tier or self._serving_tier(w, off)
-                parts = cfg["catalog"].committed_partitions(f"sumsq_{tier}")
-                if not parts:
-                    return False
-                wm = _dt2.datetime.fromisoformat(max(parts)).replace(
-                    tzinfo=_dt2.timezone.utc
-                ) + _dt2.timedelta(days=1)
-                # _bounds_utc interprets a naive literal as wall-clock
-                # under tz(), so the watermark comparison stays honest
-                # in either mode
-                _, end = self._bounds_utc(stmt)
-                if end is None or end > wm:
-                    return False
         for c in aggish:
             if c.fname not in allowed:
-                return False
+                return Raw(f"{c.fname}() has no registered tier partials")
             if not (c.args and isinstance(c.args[0], Ref)
                     and c.args[0].name == cfg["value_field"]):
-                return False
+                return Raw(f"{c.fname}() is not over {cfg['value_field']!r}")
             if c.fname == "percentile" and not (
                 len(c.args) == 2 and isinstance(c.args[1], Num)
             ):
-                return False
-        if stmt.tz:
-            from influxer_spark.query import TIER_SECONDS as _TS
+                return Raw("percentile() rank is not a literal")
+        if hdr:
+            # the hdr tables carry counter vectors, not companion sums
+            if names - pct:
+                return Raw("hdr tiers serve percentile-only statements")
+            return "hdr"
+        if names & {"first", "last"}:
+            if names - {"first", "last", "count", "min", "max", "spread"}:
+                return Raw(
+                    "ohlc tiers serve first/last with count/min/max/spread "
+                    "only"
+                )
+            return "ohlc"
+        if "stddev" in names:
+            if pct:
+                return Raw("stddev and percentile live on different tiers")
+            return "sumsq"
+        if pct:
+            return "hist"
+        # STITCHED: a width that divides no coarser tier (90m → 1m) or
+        # skips one (49h → 1h while whole days fit) reads whole 1d/1h
+        # blocks plus finer edges (query.read_rollup_stitched's routing)
+        w = int(stmt.time_width)
+        if not stmt.time_offset and not stmt.tz and cfg["as_of"] is None and (
+            (tier == "1m" and w > 3600) or (tier == "1h" and w > 86400)
+        ):
+            return "stitched"
+        return "rollup"
 
-            return self._tier_where_ok(
-                stmt, cfg["key_cols"], w,
-                modulus=_TS[tz_tier], zone=stmt.tz,
-            )
-        if use_hdr:
-            # HDR serves from hdr_1h/1d sketch tables: bounds aligned to
-            # the SERVING table's grid filter sketch buckets exactly —
-            # requiring w-alignment would wrongly force raw for the
-            # offset grid's natural (offset-aligned) bounds
-            return self._tier_where_ok(
-                stmt, cfg["key_cols"], w,
-                modulus=self._sketch_tier_seconds(w, off, stmt.tz),
-            )
-        return self._tier_where_ok(stmt, cfg["key_cols"], w)
-
-    @staticmethod
-    def _sketch_tier_seconds(w: int, off: int, tz: str | None) -> int:
-        """Serving granularity of the 1h/1d SKETCH-tier families (hdr_*,
-        kmv_*): whole days only when the output grid is day-aligned in
-        UTC — one rule shared by the answerable-side WHERE modulus and
-        the exec-side table pick, so the two can never diverge (a
-        day-width query with hour-aligned bounds must NOT read the 1d
-        table, where an hour bound cuts day buckets mid-bucket)."""
-        return (
-            86400
-            if w % 86400 == 0 and off % 86400 == 0 and not tz
-            else 3600
-        )
+    def _kmv_family(self, stmt: Select, cfg: dict) -> str | Raw:
+        """``approx_count_distinct(item)`` serves from the kmv sketch tiers
+        when it is the sole projection, over the item column they were
+        built on, at their pinned build k."""
+        c = self._kmv_sole_call(stmt)
+        if c is None:
+            return Raw("approx_count_distinct() is not the sole projection")
+        if c.args[0].name != cfg["kmv_item_col"]:
+            return Raw(f"no kmv tiers over {c.args[0].name!r}")
+        if len(c.args) > 1:
+            return Raw("explicit k: the kmv tiers store only their build k")
+        if stmt.fill_mode != "none":
+            return Raw("approx_count_distinct() with fill()")
+        return "kmv"
 
     @staticmethod
     def _tz_grid_ok(zone: str, wt: int, lo_s: int, hi_s: int) -> bool:
@@ -2118,113 +2240,6 @@ class InfluxQLEngine:
             i += 1
         return True
 
-    def _bounds_utc(self, stmt: Select):
-        """WHERE time bounds as aware-UTC datetimes.  Under tz(), naive
-        literals are wall-clock in the query zone (InfluxDB semantics —
-        the same interpretation the compiled WHERE applies row-level via
-        to_utc_timestamp); without tz they are UTC."""
-        import datetime as _dt
-        import zoneinfo as _zi
-
-        lo, hi = (
-            self._time_bounds(stmt.where) if stmt.where is not None
-            else (None, None)
-        )
-
-        def cvt(b):
-            if b is None:
-                return None
-            t = _dt.datetime.fromisoformat(b[0])
-            if t.tzinfo is None:
-                t = t.replace(
-                    tzinfo=_zi.ZoneInfo(stmt.tz) if stmt.tz
-                    else _dt.timezone.utc
-                )
-            return t.astimezone(_dt.timezone.utc)
-
-        return cvt(lo), cvt(hi)
-
-    def _tz_serving_tier(self, stmt: Select) -> str | None:
-        """Coarsest tier that serves this tz() statement exactly, or None
-        (→ raw path).  Unbounded ranges are checked over 1970–2100,
-        bounded ones over their own range — both against the per-zone
-        precomputed transition list (one bounded memo entry per zone)."""
-        from influxer_spark.query import TIER_SECONDS
-
-        w = int(stmt.time_width)
-        off = int(stmt.time_offset)
-        lo, hi = self._bounds_utc(stmt)
-        lo_s = int(lo.timestamp()) if lo else 0
-        hi_s = int(hi.timestamp()) if hi else _TZ_HORIZON_END
-        for tier in ("1d", "1h", "1m"):
-            wt = TIER_SECONDS[tier]
-            if (
-                w % wt == 0 and off % wt == 0
-                and self._tz_grid_ok(stmt.tz, wt, lo_s, hi_s)
-            ):
-                return tier
-        return None
-
-    def _tier_where_ok(
-        self, stmt: Select, key_cols: tuple[str, ...], w: int,
-        modulus: int | None = None, zone: str | None = None,
-    ) -> bool:
-        """WHERE is servable from a tier frame: every ref exists on it, and
-        time bounds are bucket-aligned [>=, <) — a mid-bucket bound needs
-        raw points.  ``modulus`` overrides the alignment width (tz()
-        serving aligns to the SERVING TIER's buckets, not the output
-        width); ``zone`` interprets naive literals as wall-clock there."""
-        import datetime as _dt
-        import zoneinfo as _zi
-
-        if stmt.where is None:
-            return True
-
-        def refs(e: Any) -> set[str]:
-            if isinstance(e, Bool):
-                out: set[str] = set()
-                for p in e.parts:
-                    out |= refs(p)
-                return out
-            if isinstance(e, (Cmp, Bin)):
-                return refs(e.left) | refs(e.right)
-            if isinstance(e, Ref):
-                return {e.name}
-            return set()
-
-        if not refs(stmt.where) <= {"time", *key_cols}:
-            return False
-        parts = (
-            stmt.where.parts
-            if isinstance(stmt.where, Bool) and stmt.where.op == "and"
-            else [stmt.where]
-        )
-        n_time = sum(
-            1 for p in parts
-            if isinstance(p, Cmp) and isinstance(p.left, Ref)
-            and p.left.name == "time"
-        )
-        lo, hi = self._time_bounds(stmt.where)
-        if n_time != (lo is not None) + (hi is not None):
-            return False  # a time cmp _time_bounds couldn't capture
-        for bound, op_ok in ((lo, ">="), (hi, "<")):
-            if bound is None:
-                continue
-            val, op = bound
-            if op != op_ok:
-                return False
-            try:
-                t = _dt.datetime.fromisoformat(val)
-            except ValueError:
-                return False
-            if t.tzinfo is None:  # naive literals: UTC, or wall under tz()
-                t = t.replace(
-                    tzinfo=_zi.ZoneInfo(zone) if zone else _dt.timezone.utc
-                )
-            if int(t.timestamp()) % (modulus or w) != 0:
-                return False
-        return True
-
     def _bucket_cond(self, where: Any) -> Column:
         """Compile a WHERE for a tier frame (time column ``bucket``),
         inheriting this statement's tz() so wall-clock time literals
@@ -2233,144 +2248,104 @@ class InfluxQLEngine:
         eng._tz = self._tz
         return eng._cond(where)
 
-    def _exec_tiered(self, stmt: Select) -> DataFrame:
-        import datetime as _dt
-
+    def _read_tier(self, stmt: Select, route: Route) -> DataFrame | None:
+        """The route's table, manifest-pruned to [start, end) and filtered
+        by the WHERE on its ``bucket`` column — filtering buckets is
+        exactly filtering the points they summarize, because every time
+        bound is aligned to the table's buckets.  None when no partition
+        is committed in range."""
         from influxer_spark import query as _qapi
 
         cfg = self.tiered[stmt.measurement]
-        w = int(stmt.time_width)
-        lo, hi = (
-            self._time_bounds(stmt.where) if stmt.where is not None
-            else (None, None)
+        cat, aso = cfg["catalog"], cfg["as_of"]
+        parts = _qapi._partitions_in_range(
+            cat, route.table, route.start, route.end, as_of=aso
         )
-        off = int(stmt.time_offset)
-        if stmt.tz:
-            # wall-clock literals → UTC for partition pruning, widened by
-            # a day each side: pruning must never EXCLUDE a partition the
-            # row-level filter (compiled with to_utc_timestamp below)
-            # still needs; the exact WHERE re-applies on every frame
-            u_lo, u_hi = self._bounds_utc(stmt)
-            start = (
-                u_lo.replace(tzinfo=None) - _dt.timedelta(days=1)
-                if u_lo else None
-            )
-            end = (
-                u_hi.replace(tzinfo=None) + _dt.timedelta(days=1)
-                if u_hi else None
-            )
-            tier = self._tz_serving_tier(stmt)
-            assert tier is not None  # _tiered_answerable gated this
-        else:
-            start = _dt.datetime.fromisoformat(lo[0]) if lo else None
-            end = _dt.datetime.fromisoformat(hi[0]) if hi else None
-            tier = self._serving_tier(w, off)
-        cat = cfg["catalog"]
-        keys = stmt.group_tags
-        agg_calls: dict[tuple, Call] = {}
-        for e, _ in stmt.projections:
-            found: list[Call] = []
-            _walk_calls(e, found)
-            for c in found:
-                if c.fname in AGGS:
-                    agg_calls[_agg_key(c)] = c
-        has_hist = any(
-            c.fname in ("percentile", "median") for c in agg_calls.values()
+        if not parts:
+            return None
+        df = self._spark().read.parquet(
+            *cat.partition_paths(route.table, parts, as_of=aso)
         )
-        has_sd = any(c.fname == "stddev" for c in agg_calls.values())
-        has_fl = any(
-            c.fname in ("first", "last") for c in agg_calls.values()
-        )
-        # stddev routes to the power-sum tables (exact integer S1/S2),
-        # first/last to the candlestick tables; everything else keeps the
-        # float rollup tables untouched
-        if has_fl:
-            table = f"ohlc_{tier}"
-        elif has_sd:
-            table = f"sumsq_{tier}"
-        else:
-            table = f"rollup_{tier}"
-        if has_hist and not cfg["hist_bounds"] and cfg.get("hdr"):
-            # bounds-free percentiles from the log-linear sketch tiers
-            # (percentile-only statements — enforced by _tiered_answerable)
-            return self._exec_hdr_percentiles(
-                stmt, cfg, w, start, end, agg_calls
-            )
+        if stmt.where is not None:
+            df = df.filter(self._bucket_cond(stmt.where))
+        return df
 
-        # STITCHED mixed-granularity rewrite (query.read_rollup_stitched's
-        # routing surfaced through the front-end): when the width divides no
-        # coarser tier (90m → 1m fallback) or skips one (49h → 1h while
-        # whole days fit), serve the buckets from a UNION of 1d/1h/1m
-        # partials instead of the finest single tier.  Algebraic aggregates
-        # only — histogram quantile cells stay on their own tier.  Bounds
-        # are w-aligned (enforced by _tier_where_ok), hence minute-aligned,
-        # so the stitch preconditions hold; any catalog-shape surprise
-        # (tiers committed unevenly) raises inside stitch_tier_frames and
-        # falls back to the single-tier path.
-        aso = cfg.get("as_of")
+    def _archive_fallback(self, stmt: Select, route: Route):
+        """Cold-tier serving: when retention has expired every plain rollup
+        partition in range (and no raw table covers the range), count/sum/
+        mean GROUP BY time() statements are answered from the compressed
+        integer archive — rollup_1m_counts carries (cnt, sum_cents) blobs
+        per series (query.read_exact_rollup), so the dashboard keeps
+        working at decode cost instead of going dark.  min/max/spread/
+        percentile cannot be served (the archive stores no extremes or
+        cells; the planner allows no archive for them).  sum/mean surface
+        the archive's exact integer cents as the engine's standard
+        quantized floats."""
+        from influxer_spark import query as _qapi
+
+        cfg = self.tiered[stmt.measurement]
+        try:
+            exact = _qapi.read_exact_rollup(
+                self._spark(), cfg["catalog"], 60, route.start, route.end,
+                key_cols=cfg["key_cols"], as_of=cfg["as_of"],
+            )
+        except ValueError:
+            return None
+        df = exact.select(
+            "bucket", *cfg["key_cols"], "cnt",
+            (F.col("sum_cents").cast("double") / F.lit(100.0)).alias("sum_v"),
+        )
+        if stmt.where is not None:
+            df = df.filter(self._bucket_cond(stmt.where))
+        return df
+
+    def _exec_tiered(self, stmt: Select, route: Route) -> DataFrame:
+        """Serve a rollup, stitched, sumsq, ohlc or hist route: the tier's
+        partials (plus the real-time raw tail) re-aggregated onto the
+        output grid."""
+        from influxer_spark import query as _qapi
+
+        cfg = self.tiered[stmt.measurement]
+        w, off = int(stmt.time_width), int(stmt.time_offset)
+        keys = stmt.group_tags
+        agg_calls = _agg_calls(stmt)
         df = None
-        if not has_hist and not has_sd and not has_fl and not off and (
-            aso is None and not stmt.tz
-        ) and (
-            (tier == "1m" and w > 3600) or (tier == "1h" and w > 86400)
-        ):
+        if route.family == "stitched":
+            # STITCHED mixed-granularity rewrite: the buckets come from a
+            # UNION of 1d/1h/1m partials instead of the finest single tier
+            # (algebraic aggregates only).  Any catalog-shape surprise
+            # (tiers committed unevenly) raises inside stitch_tier_frames
+            # and falls back to the single-tier read.
             try:
                 frames = _qapi.stitch_tier_frames(
-                    self._spark(), cat, w, start, end
+                    self._spark(), cfg["catalog"], w, route.start, route.end
                 )
             except ValueError:
-                frames = None
-            if frames:
-                narrow = ["bucket", *cfg["key_cols"],
-                          "cnt", "sum_v", "min_v", "max_v"]
-                stitched = None
-                for f in frames.values():
-                    if stmt.where is not None:
-                        f = f.filter(self._bucket_cond(stmt.where))
-                    f = f.select(narrow)
-                    stitched = f if stitched is None else stitched.unionByName(f)
-                df = stitched
-        if df is None:
-            parts = _qapi._partitions_in_range(
-                cat, table, start, end, as_of=aso
-            )
-            if parts:
-                df = self._spark().read.parquet(
-                    *cat.partition_paths(table, parts, as_of=aso)
-                )
+                frames = {}
+            narrow = ["bucket", *cfg["key_cols"],
+                      "cnt", "sum_v", "min_v", "max_v"]
+            for f in frames.values():
                 if stmt.where is not None:
-                    # compile the WHERE against the tier frame: its time
-                    # column is `bucket` (bounds are bucket-aligned — to
-                    # the serving tier under tz() — so filtering buckets
-                    # is exactly filtering the points they summarize)
-                    df = df.filter(self._bucket_cond(stmt.where))
-
-        # REAL-TIME tail (TimescaleDB real-time continuous aggregates,
-        # query.read_realtime's routing surfaced through the front-end):
-        # when the measurement also has its RAW table registered and the
-        # query range extends past the tier watermark, roll the raw tail up
-        # to tier-width partials on the fly and union — the dashboard sees
-        # points the pipeline wave hasn't materialized yet, at tier cost
-        # for history + raw cost for only the tail.  Algebraic aggregates
-        # only: histogram quantiles keep tier-only serving (their cells
-        # exist only in materialized tiers).
-        raw = self.tables.get(stmt.measurement)
-        wm = _qapi.tier_watermark(
-            cat, tier, family="ohlc" if has_fl else "rollup"
-        )
-        if raw is not None and not has_hist and not has_sd and aso is None and (
-            wm is None or end is None or end > wm
-        ):
-            tail = raw
-            if wm is not None:
-                tail = tail.filter(F.col(self.ts_col) >= F.lit(wm))
-            if start is not None:
-                tail = tail.filter(F.col(self.ts_col) >= F.lit(start))
-            if end is not None:
-                tail = tail.filter(F.col(self.ts_col) < F.lit(end))
+                    f = f.filter(self._bucket_cond(stmt.where))
+                f = f.select(narrow)
+                df = f if df is None else df.unionByName(f)
+        if df is None:
+            df = self._read_tier(stmt, route)
+        if route.tail is not None:
+            # the raw points past the tier watermark, rolled up to
+            # tier-width partials on the fly: the dashboard sees points the
+            # pipeline wave hasn't materialized yet, at tier cost for
+            # history + raw cost for only the tail
+            tail = self.tables[stmt.measurement].filter(
+                F.col(self.ts_col) >= F.lit(route.tail)
+            )
+            if route.start is not None:
+                tail = tail.filter(F.col(self.ts_col) >= F.lit(route.start))
+            if route.end is not None:
+                tail = tail.filter(F.col(self.ts_col) < F.lit(route.end))
             if stmt.where is not None:
                 tail = tail.filter(self._cond(stmt.where))
-            if has_fl:
+            if route.family == "ohlc":
                 # OHLC is algebraic: a raw tail rolled to candlesticks at
                 # tier width merges exactly under the cascade's struct order
                 from influxer_spark.operators.rollup import (
@@ -2380,7 +2355,7 @@ class InfluxQLEngine:
                 tail_p = _ro(
                     tail.filter(F.col(cfg["value_field"]).isNotNull()),
                     self.ts_col, list(cfg["key_cols"]),
-                    cfg["value_field"], tier,
+                    cfg["value_field"], route.table.split("_")[1],
                 )
                 narrow = ["bucket", *cfg["key_cols"],
                           "open_t", "open_v", "high_v", "low_v",
@@ -2390,7 +2365,7 @@ class InfluxQLEngine:
 
                 tail_p = _rw(
                     tail, self.ts_col, list(cfg["key_cols"]),
-                    cfg["value_field"], _qapi.TIER_SECONDS[tier],
+                    cfg["value_field"], route.modulus,
                 )
                 narrow = ["bucket", *cfg["key_cols"],
                           "cnt", "sum_v", "min_v", "max_v"]
@@ -2398,17 +2373,12 @@ class InfluxQLEngine:
                 tail_p.select(narrow) if df is None
                 else df.select(narrow).unionByName(tail_p.select(narrow))
             )
-        if df is None and not has_fl:
-            # archive decode re-buckets on the UTC grid only; tz() ranges
-            # past every committed tier fall back to raw (or error below)
-            df = (
-                None if off or stmt.tz
-                else self._archive_fallback(cfg, stmt, agg_calls, start, end)
-            )
+        if df is None and route.archive:
+            df = self._archive_fallback(stmt, route)
         if df is None:
-            raise InfluxQLError(f"no committed {table} partitions in range")
+            raise InfluxQLError(f"no committed {route.table} partitions in range")
         aliases = {k: f"_a{i}" for i, k in enumerate(agg_calls)}
-        if has_sd:
+        if route.family == "sumsq":
             # power-sum frame: every answer derives from exact BIGINTs
             # (rollup.with_stddev's math, inlined over the re-grouped sums)
             _n, _s1, _s2 = F.sum("cnt"), F.sum("s1"), F.sum("s2")
@@ -2424,7 +2394,7 @@ class InfluxQLEngine:
                 "spread": F.max("max_v") - F.min("min_v"),
                 "stddev": F.when(_n > 1, F.sqrt(_var_c2) / F.lit(100.0)),
             }
-        elif has_fl:
+        elif route.family == "ohlc":
             # candlestick frame: open/close merge by their ORIGINAL
             # timestamps (open_t/close_t) — the same struct total order
             # the raw path's first()/last() uses, so tier == raw
@@ -2490,87 +2460,46 @@ class InfluxQLEngine:
                     ),
                 )
             grouped = grouped.drop("_hq_hist", "_hq_cnt")
-        if stmt.fill_mode != "none":
-            bounds = None
-            if lo is not None and hi is not None:
-                bounds = self._aligned_bounds(
-                    lo, hi, stmt.time_width, stmt.time_offset
-                )
-            grouped = fill_buckets(
-                grouped, keys, list(aliases.values()), w,
-                mode=stmt.fill_mode, fill_value=stmt.fill_value,
-                bucket_col="time", spine_bounds=bounds,
-                spine_tz=self._tz,
-            ).drop("filled")
+        grouped = self._fill(stmt, grouped, keys, list(aliases.values()))
         return self._agg_tail(stmt, grouped, keys, aliases, "time", "time")
 
-    def _exec_hdr_percentiles(
-        self, stmt: Select, cfg: dict, w: int, start, end, agg_calls: dict
-    ) -> DataFrame:
+    def _exec_hdr_percentiles(self, stmt: Select, route: Route) -> DataFrame:
         """Serve a percentile-only GROUP BY time() statement from the
         ``hdr_1h/1d`` log-linear sketch tiers: manifest-pruned read,
         lossless counter-vector re-bucket to the requested width AND down
         to the statement's group tags (summing over dropped key columns),
         then nearest-rank reads — ``query.read_percentile`` surfaced
         through the text front-end, with no per-metric bound config."""
-        from influxer_spark import query as _qapi
         from influxer_spark.operators import hdrsketch as H
 
-        cat = cfg["catalog"]
-        aso = cfg.get("as_of")
-        off = int(stmt.time_offset)
-        # under tz() wall days are not UTC-day aligned, so only the 1h
-        # sketch tier serves (answerable gated this on _tz_grid_ok at 1h);
-        # a bucket offset likewise drops to 1h unless whole days divide it
-        table = (
-            "hdr_1d"
-            if self._sketch_tier_seconds(w, off, stmt.tz) == 86400
-            else "hdr_1h"
-        )
-        if not cat.exists(table):
-            table = "hdr_1h"
-        parts = _qapi._partitions_in_range(cat, table, start, end, as_of=aso)
-        if not parts:
-            raise InfluxQLError(f"no committed {table} partitions in range")
-        df = self._spark().read.parquet(
-            *cat.partition_paths(table, parts, as_of=aso)
-        )
-        if stmt.where is not None:
-            df = df.filter(self._bucket_cond(stmt.where))
+        df = self._read_tier(stmt, route)
+        if df is None:
+            raise InfluxQLError(f"no committed {route.table} partitions in range")
         keys = stmt.group_tags
         sub_bits = int(
-            cat.table_property(table, "hdr_sub_bits", H.DEFAULT_SUB_BITS)
+            self.tiered[stmt.measurement]["catalog"].table_property(
+                route.table, "hdr_sub_bits", H.DEFAULT_SUB_BITS
+            )
         )
+        agg_calls = _agg_calls(stmt)
         aliases = {k: f"_a{i}" for i, k in enumerate(agg_calls)}
         ps: dict[tuple, float] = {
             k: (0.5 if c.fname == "median" else float(c.args[1].value) / 100.0)
             for k, c in agg_calls.items()
         }
-        merged = H.hdr_rebucket(df, keys, w, tz=self._tz, offset_seconds=off)
+        merged = H.hdr_rebucket(
+            df, keys, int(stmt.time_width), tz=self._tz,
+            offset_seconds=int(stmt.time_offset),
+        )
         quants = H.hdr_quantiles(
             merged, keys, tuple(dict.fromkeys(ps.values())), sub_bits
         )
         sel = [F.col("bucket").alias("time"), *keys]
         for k, p in ps.items():
             sel.append(F.col(f"q{int(round(p * 100))}").alias(aliases[k]))
-        grouped = quants.select(*sel)
-        if stmt.fill_mode != "none":
-            lo, hi = (
-                self._time_bounds(stmt.where)
-                if stmt.where is not None
-                else (None, None)
-            )
-            bounds = None
-            if lo is not None and hi is not None:
-                bounds = self._aligned_bounds(
-                    lo, hi, stmt.time_width, stmt.time_offset
-                )
-            grouped = fill_buckets(
-                grouped, keys, list(aliases.values()), w,
-                mode=stmt.fill_mode, fill_value=stmt.fill_value,
-                bucket_col="time", spine_bounds=bounds,
-                spine_tz=self._tz,
-            ).drop("filled")
+        grouped = self._fill(
+            stmt, quants.select(*sel), keys, list(aliases.values())
+        )
         return self._agg_tail(stmt, grouped, keys, aliases, "time", "time")
 
     # --- approx_count_distinct: deterministic KMV estimate ---
@@ -2633,101 +2562,22 @@ class InfluxQLEngine:
         )
         return self._finish(stmt, out, keys)
 
-    def _kmv_tier_answerable(self, stmt: Select) -> bool:
-        cfg = self.tiered[stmt.measurement]
-        if stmt.group_star:
-            return False  # same raw-schema expansion rule as _tiered_answerable
-        if not cfg.get("kmv_item_col"):
-            return False
-        c = self._kmv_sole_call(stmt)
-        if c is None or c.args[0].name != cfg["kmv_item_col"]:
-            return False
-        if len(c.args) > 1:
-            return False  # explicit k: only the pinned build k is stored
-        if stmt.time_width is None:
-            return False
-        off = int(stmt.time_offset)
-        if stmt.time_offset != off or off % 3600 != 0:
-            return False  # the 1h sketch tier must divide the offset
-        if stmt.fill_mode != "none":
-            return False
-        w = int(stmt.time_width)
-        if stmt.time_width != w or w % 3600 != 0:
-            return False
-        if stmt.tz:
-            # wall re-bucket of the 1h sketch tier: same grid gate as the
-            # rollup/hdr paths; no 1m sketch tier exists for half-hour
-            # zones to drop to, so those stay raw
-            if self._tz_serving_tier(stmt) not in ("1h", "1d"):
-                return False
-        if not set(stmt.group_tags) <= set(cfg["key_cols"]):
-            return False
-        if stmt.tz:
-            return self._tier_where_ok(
-                stmt, cfg["key_cols"], w, modulus=3600, zone=stmt.tz
-            )
-        # bounds aligned to the SERVING table's grid suffice for
-        # exactness (bucket filtering ≡ point filtering); with an offset
-        # grid the natural bounds are offset-aligned, not w-aligned, so
-        # the w modulus would wrongly force raw.  _sketch_tier_seconds
-        # keeps this in lock-step with _exec_kmv_tiered's table pick —
-        # day-width queries with merely hour-aligned bounds get modulus
-        # 86400 and correctly fall to raw rather than mis-filter kmv_1d.
-        return self._tier_where_ok(
-            stmt, cfg["key_cols"], w,
-            modulus=self._sketch_tier_seconds(w, off, stmt.tz),
-        )
-
-    def _exec_kmv_tiered(self, stmt: Select) -> DataFrame:
-        import datetime as _dt
-
-        from influxer_spark import query as _qapi
+    def _exec_kmv_tiered(self, stmt: Select, route: Route) -> DataFrame:
         from influxer_spark.operators import kmv as KMV
 
-        cfg = self.tiered[stmt.measurement]
-        cat = cfg["catalog"]
-        w = int(stmt.time_width)
-        off = int(stmt.time_offset)
-        # wall days are not UTC-day aligned → the 1h sketch tier serves;
-        # a bucket offset likewise drops to 1h unless whole days divide it
-        table = (
-            "kmv_1d"
-            if self._sketch_tier_seconds(w, off, stmt.tz) == 86400
-            else "kmv_1h"
+        k = self.tiered[stmt.measurement]["catalog"].table_property(
+            route.table, "kmv_k"
         )
-        k = cat.table_property(table, "kmv_k")
         if k is None:
-            raise InfluxQLError(f"{table} pins no kmv_k table property")
-        if stmt.tz:
-            u_lo, u_hi = self._bounds_utc(stmt)
-            start = (
-                u_lo.replace(tzinfo=None) - _dt.timedelta(days=1)
-                if u_lo else None
-            )
-            end = (
-                u_hi.replace(tzinfo=None) + _dt.timedelta(days=1)
-                if u_hi else None
-            )
-        else:
-            lo, hi = (
-                self._time_bounds(stmt.where) if stmt.where is not None
-                else (None, None)
-            )
-            start = _dt.datetime.fromisoformat(lo[0]) if lo else None
-            end = _dt.datetime.fromisoformat(hi[0]) if hi else None
-        aso = cfg.get("as_of")
-        parts = _qapi._partitions_in_range(cat, table, start, end, as_of=aso)
-        if not parts:
-            raise InfluxQLError(f"no committed {table} partitions in range")
-        df = self._spark().read.parquet(
-            *cat.partition_paths(table, parts, as_of=aso)
-        )
-        if stmt.where is not None:
-            df = df.filter(self._bucket_cond(stmt.where))
+            raise InfluxQLError(f"{route.table} pins no kmv_k table property")
+        df = self._read_tier(stmt, route)
+        if df is None:
+            raise InfluxQLError(f"no committed {route.table} partitions in range")
         keys = stmt.group_tags
         alias = stmt.projections[0][1] or "approx_count_distinct"
         merged = KMV.kmv_rebucket(
-            df, keys, w, int(k), tz=self._tz, offset_seconds=off
+            df, keys, int(stmt.time_width), int(k), tz=self._tz,
+            offset_seconds=int(stmt.time_offset),
         )
         est = KMV.kmv_estimate(merged, keys, int(k))
         out = est.select(

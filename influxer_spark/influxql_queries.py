@@ -2448,7 +2448,7 @@ _PELT_SQL = _pelt_sql(1e9)
 def _q_influxql_tz_tier(spark, sf_dir):
     """tz() tier serving (round 4): a wall-clock daily panel in
     America/New_York answered from the 1h ROLLUP TIER (frontend
-    _tz_serving_tier + _tz_grid_ok — every NY offset is a whole hour, so
+    _plan_route + _tz_grid_ok — every NY offset is a whole hour, so
     UTC hour partials re-bucket exactly onto wall days; the 1d tier
     cannot serve because wall days are not UTC-day-aligned).  The oracle
     rebuilds the same wall-day panel from raw in SQL, so a hash match

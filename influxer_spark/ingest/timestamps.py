@@ -25,7 +25,7 @@ which nanosecond epochs (~1.7e18) exceed.
 from __future__ import annotations
 
 import re
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timedelta
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -175,8 +175,3 @@ def py_parse_ts_binary(b: int) -> datetime:
         microseconds=_py_idiv_toward_zero(ticks - _EPOCH_TICKS, 10)
     )
 
-
-def utc_naive(dt: datetime) -> datetime:
-    if dt.tzinfo is not None:
-        return dt.astimezone(timezone.utc).replace(tzinfo=None)
-    return dt

@@ -54,12 +54,6 @@ def agg_spread(df: DataFrame, group_cols: Sequence[str], value_col: str) -> Data
     return df.groupBy(*group_cols).agg((F.max(v) - F.min(v)).alias("spread"))
 
 
-def agg_stddev(df: DataFrame, group_cols: Sequence[str], value_col: str) -> DataFrame:
-    return df.groupBy(*group_cols).agg(
-        F.stddev_samp(value_col).alias("stddev")
-    )
-
-
 def agg_percentile(
     df: DataFrame, group_cols: Sequence[str], value_col: str, p: float
 ) -> DataFrame:

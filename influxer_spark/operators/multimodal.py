@@ -470,7 +470,8 @@ def build_av_payload_bytes(h: int) -> bytes:
 def parse_av_meta_bytes(b: bytes) -> dict:
     """Pure container parse of one payload → AV_META_SCHEMA fields
     (without id).  On any error every field is NULL except decode_error
-    (empty / not_media / truncated / no_fmt / no_data / no_mvhd)."""
+    (empty / not_media / truncated / no_fmt / no_data / non_pcm /
+    no_mvhd)."""
     null = dict.fromkeys(
         ("container", "channels", "sample_rate", "bits_per_sample",
          "n_samples", "brand", "timescale", "duration", "duration_ms"),
@@ -504,6 +505,11 @@ def parse_av_meta_bytes(b: bytes) -> dict:
             return err("no_fmt")
         if data_size is None:
             return err("no_data")
+        # only PCM (1) and WAVE_FORMAT_EXTENSIBLE (0xFFFE) frame samples at
+        # bits/8 bytes; a compressed payload (0x0055 MP3-in-RIFF) has no
+        # sample count derivable from the data size
+        if int.from_bytes(fmt[0:2], "little") not in (1, 0xFFFE):
+            return err("non_pcm")
         ch = int.from_bytes(fmt[2:4], "little")
         rate = int.from_bytes(fmt[4:8], "little")
         bits = int.from_bytes(fmt[14:16], "little")

@@ -490,24 +490,6 @@ def process_days(
         wide.unpersist()
 
 
-def process_day(
-    spark: SparkSession,
-    pages: DataFrame,
-    catalog: TableCatalog,
-    day: str,
-    encode_gorilla: bool = True,
-    validate_extraction: bool = False,
-    source: str = "",
-) -> dict[str, Any]:
-    """Single-day wave (kept for targeted reprocessing + tests)."""
-    return process_days(
-        spark, pages, catalog, [day],
-        encode_gorilla=encode_gorilla,
-        validate_extraction=validate_extraction,
-        source=source,
-    )[day]
-
-
 def refresh_pipeline(
     spark: SparkSession,
     pages_path: str,

@@ -4,9 +4,14 @@ picks.  The round-2 `GROUP BY time(), *` silent wrong answer was exactly
 this bug class — a hand-written sweep can only pin the shapes someone
 thought of; hypothesis explores the cross product (aggregate subsets ×
 widths incl. non-divisors × tag groupings × fills × where × order/limit
-× SLIMIT) and shrinks any divergence to a minimal statement."""
+× SLIMIT × bucket offsets × WHERE time bounds) and shrinks any
+divergence to a minimal statement.  The route itself must be a pure
+function of the statement: planning it twice gives the same route."""
 
 from __future__ import annotations
+
+import datetime as dt
+import math
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -15,12 +20,32 @@ from hypothesis import strategies as st
 from influxer_spark.catalog import TableCatalog
 from influxer_spark.datagen import generate_pages
 from influxer_spark.extract import pages_to_points, with_crawl_metrics, with_extracted
-from influxer_spark.influxql_frontend import InfluxQLEngine
+from influxer_spark.influxql_frontend import InfluxQLEngine, parse, parse_duration
 from influxer_spark.pipeline import run_pipeline
+from influxer_spark.query import TIER_SECONDS, select_tier
 
 _AGGS = ["count", "sum", "mean", "min", "max", "spread"]
 _WIDTHS = ["30m", "1h", "90m", "2h", "4h", "7h", "12h", "1d", "49h"]
 _METRICS = ["n_tokens", "html_bytes", "text_bytes"]
+_OFFSETS = ["", "30m", "1h", "90s"]
+_DAY0 = dt.datetime(2024, 3, 1)  # generate_pages' first day
+
+
+def _time_range(kind: str, width: str, offset: str) -> str:
+    """WHERE time bounds of one kind: none, day-aligned, aligned to the
+    serving tier (the coarsest tier dividing width and offset) but
+    generally not to the width, or mid-minute."""
+    if kind == "none":
+        return ""
+    lo, hi = _DAY0, _DAY0 + dt.timedelta(days=2)
+    if kind == "tier":
+        g = math.gcd(int(parse_duration(width)),
+                     int(parse_duration(offset)) if offset else 0)
+        step = dt.timedelta(seconds=TIER_SECONDS[select_tier(g)])
+        lo, hi = lo + step, hi + step
+    elif kind == "unaligned":
+        lo += dt.timedelta(seconds=30)
+    return f"time >= '{lo:%Y-%m-%d %H:%M:%S}' AND time < '{hi:%Y-%m-%d %H:%M:%S}'"
 
 
 @pytest.fixture(scope="module")
@@ -59,19 +84,28 @@ def statements(draw):
     else:
         proj = ", ".join(f"{a}(value) AS a_{a}" for a in aggs)
     width = draw(st.sampled_from(_WIDTHS))
+    offset = draw(st.sampled_from(_OFFSETS))
     tags = draw(st.sampled_from(["", ", metric", ", metric, url", ", *"]))
-    where = draw(
-        st.sampled_from(
-            ["", f" WHERE metric = '{draw(st.sampled_from(_METRICS))}'"]
-        )
-    )
+    conds = [
+        c for c in (
+            draw(st.sampled_from(
+                ["", f"metric = '{draw(st.sampled_from(_METRICS))}'"]
+            )),
+            _time_range(
+                draw(st.sampled_from(["none", "day", "tier", "unaligned"])),
+                width, offset,
+            ),
+        ) if c
+    ]
+    where = f" WHERE {' AND '.join(conds)}" if conds else ""
+    grid = f"{width}, {offset}" if offset else width
     fill = draw(st.sampled_from(["", " fill(none)", " fill(0)", " fill(previous)"]))
     order = draw(st.sampled_from(["", " ORDER BY time DESC"]))
     limit = draw(st.sampled_from(["", " LIMIT 5", " LIMIT 7 OFFSET 2"]))
     slimit = draw(st.sampled_from(["", " SLIMIT 3"])) if tags else ""
     return (
         f"SELECT {proj} FROM pages{where} "
-        f"GROUP BY time({width}){tags}{fill}{order}{limit}{slimit}"
+        f"GROUP BY time({grid}){tags}{fill}{order}{limit}{slimit}"
     )
 
 
@@ -83,6 +117,8 @@ def statements(draw):
 @given(q=statements())
 def test_any_tiered_statement_matches_raw(engines, q):
     raw, tiered = engines
+    stmt = parse(q)
+    assert tiered._plan_route(stmt) == tiered._plan_route(stmt), q
     want = raw.execute(q)
     got = tiered.execute(q)
     assert got.columns == want.columns, q

@@ -839,9 +839,11 @@ def test_offset_buckets_tier_served_and_exact(built):
     """GROUP BY time(w, off) with a minute-aligned offset tier-serves: an
     offset that keeps the coarse grid (1h over 4h) reads the 1h tier; an
     offset that breaks it (30m over 1h) drops to the 1m tier.  Both must
-    equal the raw recompute exactly."""
+    equal the raw recompute exactly — also when the WHERE bounds sit on
+    the offset grid, which the serving tier's buckets align to."""
     points, cat = built
     raw, tiered = _engines(points, cat)
+    days = sorted(cat.committed_partitions("rollup_1m"))
     for q, expect_tbl in [
         (
             "SELECT count(value) AS cnt, min(value) AS mn "
@@ -853,6 +855,13 @@ def test_offset_buckets_tier_served_and_exact(built):
             "FROM pages GROUP BY time(1h, 30m), metric",
             "rollup_1m",
         ),
+        (
+            "SELECT count(value) AS cnt, min(value) AS mn FROM pages "
+            f"WHERE time >= '{days[0]} 00:30:00' "
+            f"AND time < '{days[1]} 00:30:00' "
+            "GROUP BY time(1h, 30m), metric",
+            "rollup_1m",
+        ),
     ]:
         df = tiered.execute(q)
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -860,6 +869,58 @@ def test_offset_buckets_tier_served_and_exact(built):
         want = {tuple(r[:2]): tuple(r[2:]) for r in raw.execute(q).collect()}
         got = {tuple(r[:2]): tuple(r[2:]) for r in df.collect()}
         assert got == want and len(got) > 10
+
+
+def test_explain_prints_the_route(built_hdr, spark):
+    """EXPLAIN's first row is the planned route: family, serving table,
+    WHERE modulus and raw tail of a tier route, or the rule that sent the
+    statement to raw; EXPLAIN ANALYZE still ends with the row count."""
+    from influxer_spark.operators.kmv import build_kmv_tiers
+
+    points, cat = built_hdr
+    if not cat.exists("kmv_1h"):
+        build_kmv_tiers(
+            spark, cat, points, "warc_ts", ["metric"], "url", k=32
+        )
+    eng = InfluxQLEngine({"pages": points}, ts_col="warc_ts")
+    eng.register_tiered(
+        "pages", cat, key_cols=("url", "metric"), hdr=True,
+        kmv_item_col="url",
+    )
+
+    def route(q):
+        return eng.execute(f"EXPLAIN {q}").collect()[0]["plan"]
+
+    import datetime as dt
+
+    wm = dt.date.fromisoformat(max(cat.committed_partitions("rollup_1h")))
+    assert route(
+        "SELECT mean(value) FROM pages GROUP BY time(4h), metric"
+    ).startswith(
+        "route: rollup — rollup_1h, modulus 3600s, raw tail from "
+        f"{wm + dt.timedelta(days=1)} 00:00:00"
+    )
+    assert route(
+        "SELECT median(value) FROM pages GROUP BY time(4h), metric"
+    ) == "route: hdr — hdr_1h, modulus 3600s, no raw tail"
+    assert route(
+        "SELECT approx_count_distinct(url) FROM pages "
+        "GROUP BY time(4h), metric"
+    ) == "route: kmv — kmv_1h, modulus 3600s, no raw tail"
+    assert route(
+        "SELECT count(value) FROM pages GROUP BY time(1d), lang"
+    ) == "route: raw — group tag 'lang' not in tier keys"
+    # a reversed bound is no aligned tier bound: tier buckets would drop
+    # the points of its first, partial minute
+    assert route(
+        "SELECT count(value) FROM pages "
+        "WHERE '2024-03-01 00:00:30' <= time GROUP BY time(1m)"
+    ) == "route: raw — WHERE time condition is not a literal bound"
+    rows = eng.execute(
+        "EXPLAIN ANALYZE SELECT count(value) FROM pages GROUP BY time(1d), lang"
+    ).collect()
+    assert rows[0]["plan"].startswith("route: raw")
+    assert rows[-1]["plan"].startswith("rows: ")
 
 
 def test_sub_minute_offset_falls_back_to_raw(built):

@@ -258,15 +258,23 @@ def test_decode_av_meta_spark_matches_oracle(spark, sf_dir):
 
 def test_wav_truncated_inside_data_chunk_is_flagged():
     """A WAV cut off mid-data (intact headers, declared data size larger
-    than the bytes present) must report 'truncated', not fabricate
+    than the bytes present) must report 'truncated', and a non-PCM WAV
+    (format tag 0x0055, MP3-in-RIFF) 'non_pcm' — neither may fabricate
     n_samples/duration from the declared size."""
     import struct
 
-    fmt = struct.pack("<HHIIHH", 1, 2, 44100, 176400, 4, 16)
-    blob = (
-        b"RIFF" + struct.pack("<I", 4 + 24 + 8 + 176400) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", 176400) + bytes(100)  # cut short
-    )
-    m = M.parse_av_meta_bytes(blob)
-    assert m["decode_error"] == "truncated" and m["n_samples"] is None
+    def wav(tag: int, data: bytes, declared: int) -> bytes:
+        fmt = struct.pack("<HHIIHH", tag, 2, 44100, 176400, 4, 16)
+        return (
+            b"RIFF" + struct.pack("<I", 4 + 24 + 8 + declared) + b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", declared) + data
+        )
+
+    for blob, code in (
+        (wav(1, bytes(100), 176400), "truncated"),  # cut short
+        (wav(0x0055, bytes(400), 400), "non_pcm"),
+    ):
+        m = M.parse_av_meta_bytes(blob)
+        assert m["decode_error"] == code
+        assert m["n_samples"] is None and m["duration_ms"] is None

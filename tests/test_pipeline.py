@@ -89,12 +89,12 @@ def test_resume_after_partial_run_matches_oneshot(spark, pages_path, tmp_path):
     run_pipeline(spark, pages_path, root_a)
 
     # partial: process only the first day, then "crash"
-    from influxer_spark.pipeline import _distinct_days, process_day
+    from influxer_spark.pipeline import _distinct_days, process_days
 
     pages = spark.read.parquet(pages_path)
     days = _distinct_days(pages)
     cat_b = TableCatalog(root_b)
-    process_day(spark, pages, cat_b, days[0], source=pages_path)
+    process_days(spark, pages, cat_b, [days[0]], source=pages_path)
     # resume the rest
     res = run_pipeline(spark, pages_path, root_b)
     assert days[0] in res.days_skipped
