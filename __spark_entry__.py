@@ -3125,166 +3125,6 @@ def _q_unpivot_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 # registry
 # ---------------------------------------------------------------------------
 
-# The driver's correctness gate records the FIRST 50 entries of queries() in
-# declaration order.  Rounds 1-2 proved 59 distinct queries (50 in r02 + 9
-# r01-only ingest-parity); round 3 front-loads the never-driver-checked,
-# value-oracled queries — including every round-3 addition — into positions
-# 1-50.  59 such queries exist and only 50 fit, so positions 51-59 hold the
-# nine deferred ones: each is a close sibling of a query that IS in the window
-# or was driver-proven in r01/r02 (noted inline), all are green in the local
-# replica gate (tools/compare_oracle.py) and pytest, and they are first in
-# line for the round-4 window.  Already-proven queries follow, and the
-# rows-only entries (no SQL oracle by nature) sit at the very tail so they
-# never burn a hard-signal slot.
-_WINDOW_PRIORITY = [
-    # ---- positions 1-50: never driver-checked, all value-oracled ----
-    "stratified_sample_lang",
-    "upsample_epochs_mixture",
-    "global_shuffle_documents",
-    "embedding_quantize_int8",
-    "dedup_cluster_keep",
-    "line_protocol_roundtrip",
-    "influxql_math_6h",
-    "influxql_fill_linear_6h",
-    "influxql_deriv_sum_6h",
-    "influxql_subquery_6h_max",
-    "influxql_multi_measurement",
-    "influxql_ema_series",
-    "influxql_rsi_series",
-    "influxql_cmo_ker_series",
-    "influxql_kama_series",
-    "influxql_trix_series",
-    "influxql_counter_rate",
-    "lttb_downsample_50",
-    "m4_downsample_1h",
-    "seasonal_decompose_24h",
-    "acf_48_hourly",
-    "series_corr_hourly",
-    "deadman_1h",
-    "anomaly_mad_hourly",
-    "cusum_changepoints_hourly",
-    "line_dedup_corpus",
-    "url_canonicalize",
-    "pii_scrub_counts",
-    # -- round-3 additions (value-oracled) fill the rest of the window --
-    "twa_1h_cascade",
-    "influxql_moving_median",
-    "incremental_dedup_shard",
-    "bloom_decontam",
-    "heavy_hitters_1d",
-    "cross_corr_lags",
-    "curation_funnel",
-    "stream_heavy_hitters_replay",
-    "gopher_quality_flags",
-    "containment_dedup",
-    "bigram_logprob_scores",
-    "snaive_mase_24h",
-    "kmv_distinct_1d",
-    "stream_kmv_replay_1d",
-    "kmv_tier_read_4h",
-    "interval_join_2h",
-    "weighted_sample_quality",
-    "dsir_resample_en",
-    "influxql_counter_family",
-    "influxql_approx_distinct",
-    "resid_anomaly_24h",
-    "sax_daily_motifs",
-    # ---- positions 51-59: deferred to the round-4 window (each has a
-    # driver-proven or in-window sibling; all replica-gate + pytest green) ----
-    "line_protocol_events",        # sibling: line_protocol_roundtrip (in window)
-    "influxql_nnd_6h",             # derivative path: influxql_deriv_sum_6h + counter_rate
-    "influxql_count_distinct_1d",  # distinct path: influxql_approx_distinct (in window)
-    "influxql_slimit_series",      # series pagination garnish on proven GROUP BY machinery
-    "influxql_show_tag_values",    # metadata query; SHOW family shares one code path
-    "influxql_top_per_tag",        # sibling: influxql_top3_hours (r01-proven)
-    "influxql_fill_previous_6h",   # LOCF: gapfill_1h_locf (r01) + fill_linear (in window)
-    "influxql_mode_median_6h",     # median: influxql_selectors_1h (r01) + moving_median
-                                   # (in window); mode shares the selector rank path
-    "stream_sessionize_replay",    # siblings: sessionize_30m (r01) + stream replay
-                                   # harness proven by stream_rollup_replay_1m (r02)
-                                   # and stream_heavy_hitters/kmv_replay (in window)
-    "dotnet_round2_parity",        # r01-proven; re-prove when a slot frees up
-    # ---- added after the round-3 window froze (value-oracled in the local
-    # replica gate; next in line with the deferrals above) ----
-    "tier_refresh_1h",
-    "influxql_show_cardinality",
-    "influxql_wildcard_agg",
-    "alert_transitions_1h",
-    "stream_alert_replay",
-    "realtime_rollup_4h",
-    "hdr_quantile_1h",
-    "influxql_sigma_1h",
-    "c4_quality_flags",
-    "rrf_hybrid_topk",
-    "exact_substr_dedup",
-    "stream_hdr_replay_1h",
-    "hdr_tier_read_4h",
-    "stream_twa_replay_1h",
-    "tier_stddev_1h",
-    "kmv_set_ops_1d",
-    "tvd_drift_daily",
-    "topk_exact_users",
-    "centroid_cosine_labels",
-    "stream_deadman_replay",
-    "incremental_minhash_shard",
-    "hdr_seasonal_band",
-    "stream_stddev_replay_1h",
-    "chunk_documents_32_8",
-    "kmv_sliding_24h",
-    "rollup_sliding_24h",
-    "seasonal_band_anomaly_1h",
-    "hdr_sliding_p95_24h",
-    "sumsq_sliding_24h",
-    "mixture_plan_sources",
-    "hdr_histogram_1d",
-    "funnel_view_click_purchase",
-    "cohort_retention_daily",
-    "event_transition_matrix",
-    "funnel_latency_quantiles",
-    "ann_ivf_index_topk",
-    "matrix_profile_24h",
-    "matrix_profile_ab_recent",
-    "influxql_matrix_profile",
-    "matrix_profile_tier_read",
-    "export_train_shards",
-    "dominant_period_48",
-    "ngram_novelty_scores",
-    "ivf_pq_index_topk",
-    "ivf_pq_index_extend_topk",
-    "stream_ivfpq_extend_replay",
-    "trend_mk_theilsen_daily",
-    "delete_where_takedown",
-    "merge_into_recrawl",
-    "update_where_redact",
-    "influxql_trend_hourly",
-    "incremental_read_new_days",
-    "wap_publish_rollup",
-    "forecast_linear_24h",
-    "influxql_forecast_linear",
-    "schema_evolution_read",
-    "partition_evolution_read",
-    "ohlc_1h",
-    "ohlc_1d_cascade",
-    "ohlc_tier_read_4h",
-    "stream_ohlc_replay_1h",
-    "ohlc_sliding_24h",
-    "influxql_offset_6h1h",
-    # ---- round-4 additions: rows-only queries converted to value oracles
-    # (recursive-CTE replays of the exact kernel op order) ----
-    "theta_forecast_24h",
-    "dtw_pairs_hourly",
-    "pelt_segments_hourly",
-    "influxql_tz_tier_1d",
-    "kmv_tz_tier_1d",
-    # ---- round-5 additions ----
-    "decode_image_meta",
-    "influxql_tz_fill_tier_6h",
-    "decode_av_meta",
-    "influxql_tz_offset_tier_6h1h",
-    "kmv_offset_tier_4h1h",
-    "hdr_offset_tier_6h1h",
-]
-
 # Rows-only queries (genuinely non-SQL-expressible internals) — always last.
 _WINDOW_TAIL = [
     # rows-only entries (no SQL oracle exists): keep them out of the
@@ -3304,22 +3144,14 @@ _WINDOW_TAIL = [
 ]
 
 
-def _driver_proven(records_dir: str | None = None) -> set[str]:
-    """Query names with a green (hash-matched) row in ANY recorded
-    CORRECTNESS_r*.json next to this file.
-
-    The driver value-checks only the FIRST 50 ``queries()`` entries per
-    round, so with >50 oracled queries the window must rotate.  Reading the
-    recorded results makes the rotation automatic and deterministic: every
-    round, queries that have never earned a green row sort ahead of ones
-    that already have, so successive rounds' windows tile the whole set
-    with no manual reordering (and a query whose check FAILED stays in the
-    window until it passes)."""
+def _green_rounds(records_dir: str | None = None) -> dict[str, int]:
+    """Per query name, how many recorded CORRECTNESS_r*.json next to this
+    file hold a green (hash-matched) row for it."""
     import glob as _glob
     import json as _json
 
     here = records_dir or os.path.dirname(os.path.abspath(__file__))
-    proven: set[str] = set()
+    greens: dict[str, int] = {}
     for path in sorted(_glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
         try:
             with open(path) as fh:
@@ -3328,19 +3160,31 @@ def _driver_proven(records_dir: str | None = None) -> set[str]:
             continue
         for name, row in rec.items():
             if isinstance(row, dict) and row.get("hash_match"):
-                proven.add(name)
-    return proven
+                greens[name] = greens.get(name, 0) + 1
+    return greens
+
+
+def _driver_proven(records_dir: str | None = None) -> set[str]:
+    """Query names with a green row in ANY recorded CORRECTNESS_r*.json."""
+    return set(_green_rounds(records_dir))
 
 
 def _reorder_for_gate(
     q: dict[str, Callable[[SparkSession, str], DataFrame]],
 ) -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    proven = _driver_proven()
-    # stable base order: explicit priority list first, then declaration order
-    base = [k for k in _WINDOW_PRIORITY if k in q]
-    base += [k for k in q if k not in base and k not in _WINDOW_TAIL]
-    ordered = {k: q[k] for k in base if k not in proven}
-    ordered.update({k: q[k] for k in base if k in proven})
+    """The driver value-checks only the FIRST 50 ``queries()`` entries per
+    round, so with >50 oracled queries the window must rotate.  Reading the
+    recorded results makes the rotation automatic and deterministic: queries
+    sort by how many rounds recorded them green, fewest first (declaration
+    order breaks ties), so never-proven queries lead (a failed check keeps
+    its query there until it passes) and successive windows tile the whole
+    set with no manual reordering.  Rows-only queries sit at the tail,
+    where they never burn a value-check slot."""
+    greens = _green_rounds()
+    base = sorted(
+        (k for k in q if k not in _WINDOW_TAIL), key=lambda k: greens.get(k, 0)
+    )
+    ordered = {k: q[k] for k in base}
     ordered.update({k: q[k] for k in _WINDOW_TAIL if k in q})
     return ordered
 

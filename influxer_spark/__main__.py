@@ -383,6 +383,7 @@ def main(argv: list[str] | None = None) -> int:
 
         from influxer_spark.catalog import TableCatalog
         from influxer_spark.operators.retention import apply_retention
+        from influxer_spark.tiers import family_tables
 
         cat = TableCatalog(args.catalog)
         report: dict = {}
@@ -399,15 +400,7 @@ def main(argv: list[str] | None = None) -> int:
         report["retention_dropped"] = {
             t: sorted(p) for t, p in sorted(dropped.items())
         }
-        tables = [
-            t for t in ("raw_points", "rollup_1m", "rollup_1m_gorilla",
-                        "rollup_1m_counts", "rollup_1h", "rollup_1d",
-                        # auxiliary tier families accrue snapshots too
-                        "sumsq_1m", "sumsq_1h", "sumsq_1d",
-                        "ohlc_1m", "ohlc_1h", "ohlc_1d",
-                        "kmv_1h", "kmv_1d", "hdr_1h", "hdr_1d")
-            if cat.exists(t)
-        ]
+        tables = [t for t in family_tables() if cat.exists(t)]
         compacted: dict[str, int] = {}
         expired: dict[str, dict[str, int]] = {}
         freed = 0
@@ -456,11 +449,11 @@ def main(argv: list[str] | None = None) -> int:
         if not args.catalog:
             parser.error("-compact requires -catalog")
         from influxer_spark.catalog import TableCatalog
+        from influxer_spark.tiers import FAMILIES
 
         cat = TableCatalog(args.catalog)
         tables = (
-            ["raw_points", "rollup_1m", "rollup_1m_gorilla",
-             "rollup_1m_counts", "rollup_1h", "rollup_1d"]
+            FAMILIES["pipeline"].tables
             if args.compact.strip().lower() == "all"
             else [t for t in args.compact.split(",") if t]
         )

@@ -2,8 +2,9 @@
 
 The reference's per-column Transform stage (ITransform,
 Influxer/Interfaces/ITransform.cs:3-12, chained at
-Influxer/GenericColumn.cs:120-145) maps to vectorized pandas UDFs here, per
-BASELINE.json input_hint: "vectorized pandas/Arrow UDFs (no per-row Python)".
+Influxer/GenericColumn.cs:120-145) maps to one Arrow batch kernel here
+(``mapInArrow``), per BASELINE.json input_hint: "vectorized pandas/Arrow
+UDFs (no per-row Python)".
 
 Extraction rule (deterministic, byte-level — this is THE per-row invariant):
 1. decode utf-8,
@@ -19,14 +20,11 @@ the extraction itself.
 
 from __future__ import annotations
 
-import os
 import re
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType, StructField, StructType
 
 _BODY_RE = re.compile(rb"<body[^>]*>(.*?)</body>", re.DOTALL)
@@ -66,62 +64,35 @@ def extract_text_bytes(html: bytes) -> str:
     return b" ".join(stripped.split()).decode("utf-8")
 
 
-def _impl() -> str:
-    """'arrow' (default): batch-vectorized numpy kernel over raw Arrow
-    buffers via mapInArrow — zero per-row Python (north-rule input_hint),
-    no pandas materialization.  'arrowcol': same kernel inside the
-    column-level pandas UDF (only html ships to the worker, but the
-    pandas boundary costs more than it saves — measured, BASELINE.md).
-    'scalar': the per-row C-loop path (bytes.find/re.sub), kept as the
-    byte-parity witness; statistically tied with 'arrow' end-to-end on
-    this VM (median 73.7s vs 74.2s, pinned local[8], 8M rows ×3)."""
-    return os.environ.get("SPARK_GRAFT_EXTRACT_IMPL", "arrow")
-
-
-@pandas_udf(StringType())
-def extract_text(html: pd.Series) -> pd.Series:
-    """Arrow-batched html→text. Operates on the raw bytes of each batch —
-    deterministic byte-level regexes, no HTML-parser heuristics, so the same
-    html always yields the same text (per-row invariant)."""
-    if _impl() == "scalar":
-        return html.map(extract_text_bytes)
-    from influxer_spark.extract_kernel import extract_kernel
-
-    return extract_kernel(pa.array(html, type=pa.large_binary())).to_pandas()
-
-
 def with_extracted(pages: DataFrame, validate: bool = False) -> DataFrame:
     """pages(url, warc_ts, html[, text], lang) → + extracted_text + metrics.
 
-    Default path is ``mapInArrow``: batches stay Arrow RecordBatches end to
-    end (scan → kernel → downstream), no pandas materialization and no
-    per-row Python.  Note mapInArrow is a projection barrier — Catalyst
+    One ``mapInArrow`` pass: batches stay Arrow RecordBatches end to end
+    (scan → kernel → downstream), no pandas materialization and no per-row
+    Python.  Note mapInArrow is a projection barrier — Catalyst
     cannot prune *input* columns below it, so hot paths should select the
     columns they need before calling (pipeline.py does).
 
     With ``validate=True`` keeps a boolean ``text_ok`` column comparing the
     extraction against the stored ``text`` column (byte-identical check).
     """
-    if _impl() == "arrow":
-        from influxer_spark.extract_kernel import extract_kernel
+    from influxer_spark.extract_kernel import extract_kernel
 
-        names = list(pages.columns)
-        h = names.index("html")
-        out_schema = StructType(
-            list(pages.schema.fields) + [StructField("extracted_text", StringType())]
-        )
+    names = list(pages.columns)
+    h = names.index("html")
+    out_schema = StructType(
+        list(pages.schema.fields) + [StructField("extracted_text", StringType())]
+    )
 
-        def fn(batches):
-            for b in batches:
-                ext = extract_kernel(b.column(h)).cast(pa.string())
-                yield pa.RecordBatch.from_arrays(
-                    [b.column(i) for i in range(b.num_columns)] + [ext],
-                    names=names + ["extracted_text"],
-                )
+    def fn(batches):
+        for b in batches:
+            ext = extract_kernel(b.column(h)).cast(pa.string())
+            yield pa.RecordBatch.from_arrays(
+                [b.column(i) for i in range(b.num_columns)] + [ext],
+                names=names + ["extracted_text"],
+            )
 
-        df = pages.mapInArrow(fn, schema=out_schema)
-    else:
-        df = pages.withColumn("extracted_text", extract_text(F.col("html")))
+    df = pages.mapInArrow(fn, schema=out_schema)
     if validate and "text" in pages.columns:
         df = df.withColumn("text_ok", F.col("extracted_text") == F.col("text"))
     return df

@@ -2,7 +2,7 @@
 Python).
 
 This is the Arrow-native implementation of the engine's per-row invariant
-(``extract_text(html) == text`` byte-identical, the analogue of the
+(extracted text ``== text`` byte-identical, the analogue of the
 reference's per-column transform chain, Influxer/GenericColumn.cs:120-145):
 one numpy pass-pipeline over the *concatenated byte buffer* of an Arrow
 binary column, instead of a Python call per row.  The extraction rule (the
@@ -41,9 +41,9 @@ offsets ``O``:
 
 Cost: ~15 linear passes over the batch buffer and its (much smaller)
 position arrays — no Python object per row, no backtracking, allocation
-reuse across batches.  The scalar C-loop path (``extract.extract_text_bytes``)
-remains available via SPARK_GRAFT_EXTRACT_IMPL=scalar; see BASELINE.md for
-the measured single-core tradeoff on this VM.
+reuse across batches.  The scalar C-loop form (``extract.extract_text_bytes``)
+stays as the byte-parity reference the kernel's tests compare against; see
+BASELINE.md for the measured single-core tradeoff.
 """
 
 from __future__ import annotations

@@ -86,6 +86,7 @@ from pyspark.sql import functions as F
 
 from influxer_spark.operators import influxql as Q
 from influxer_spark.operators.gapfill import fill_buckets
+from influxer_spark.tiers import family_tables
 
 
 class InfluxQLError(ValueError):
@@ -2928,15 +2929,7 @@ class InfluxQLEngine:
                 for m, cfg in sorted(self.tiered.items()):
                     cat = cfg["catalog"]
                     for tbl in sorted(
-                        t for t in (
-                            "raw_points", "rollup_1m", "rollup_1m_gorilla",
-                            "rollup_1m_counts",
-                            "rollup_1h", "rollup_1d", "kmv_1h", "kmv_1d",
-                            "hdr_1h", "hdr_1d",
-                            "sumsq_1m", "sumsq_1h", "sumsq_1d",
-                            "ohlc_1m", "ohlc_1h", "ohlc_1d",
-                        )
-                        if cat.exists(t)
+                        t for t in family_tables() if cat.exists(t)
                     ):
                         parts = cat.committed_partitions(tbl)
                         rows_in = sum(
@@ -3129,13 +3122,6 @@ class InfluxQLEngine:
             return spark.createDataFrame([(name,)], "deleted_from string")
         raise InfluxQLError(f"unsupported statement: {sql!r}")
 
-    # every tier family a tiered measurement may have materialized; DELETE
-    # must hit them all or the families drift out of sync
-    _TIER_TABLES = ("rollup_1m", "rollup_1h", "rollup_1d",
-                    "sumsq_1m", "sumsq_1h", "sumsq_1d",
-                    "ohlc_1m", "ohlc_1h", "ohlc_1d",
-                    "kmv_1h", "kmv_1d", "hdr_1h", "hdr_1d")
-
     def _delete_tiered(self, name: str, cond: Any) -> dict[str, dict]:
         """``DELETE FROM <tiered measurement>`` against the PERSISTED tier
         tables: tier rows are aggregates, so a row-level delete is exact
@@ -3211,7 +3197,7 @@ class InfluxQLEngine:
         # rollup tiers already rewritten while the sketch tiers still hold
         # the series (the drift this method exists to prevent).
         if tag_cols:
-            for table in self._TIER_TABLES:
+            for table in family_tables(raw=False, archives=False):
                 if not cat.exists(table):
                     continue
                 cols = cat.table_columns(table)
@@ -3230,7 +3216,12 @@ class InfluxQLEngine:
             and not (self._is_time(c.left) or self._is_time(c.right))
             for c in parts
         )
-        for table in self._TIER_TABLES:
+        # every family's tier tables (tiers.TIER_FAMILIES), or the families
+        # drift out of sync.  Whole-partition deletes drop the archives
+        # too, else the archive fallback serves the deleted days; they key
+        # series by ``series_keys``, not tag columns, so a tag predicate
+        # cannot reach them.
+        for table in family_tables(raw=False, archives=time_only):
             if not cat.exists(table):
                 continue
             candidates = None

@@ -56,6 +56,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from influxer_spark.tiers import build_tiers
+
 TIER_SECONDS: dict[str, int] = {"1m": 60, "5m": 300, "1h": 3600, "1d": 86400}
 
 DEFAULT_SUB_BITS = 5  # 2^5 linear sub-buckets per octave → rel err ≤ 1/32
@@ -197,25 +199,11 @@ def build_hdr_tiers(
     mix.  Unlike the histogram tiers (pipeline ``hist_bounds=``) no value
     bounds are configured — the log-linear grid adapts to any range.
     Returns the committed day list."""
-    keys = list(key_cols)
-    h1 = hdr_rollup(df, ts_col, keys, value_col, "1h", sub_bits).withColumn(
-        "day", F.date_format("bucket", "yyyy-MM-dd")
+    return build_tiers(
+        catalog, "hdr",
+        hdr_rollup(df, ts_col, list(key_cols), value_col, "1h", sub_bits),
+        hdr_cascade, key_cols, value_col, sub_bits,
     )
-    h1.persist()
-    try:
-        days = [r["day"] for r in h1.select("day").distinct().collect()]
-        catalog.write_partitions(h1, "hdr_1h", days)
-        d1 = hdr_cascade(h1.drop("day"), keys, "1d").withColumn(
-            "day", F.date_format("bucket", "yyyy-MM-dd")
-        )
-        catalog.write_partitions(d1, "hdr_1d", days)
-    finally:
-        h1.unpersist()
-    for t in ("hdr_1h", "hdr_1d"):
-        catalog.set_table_property(t, "hdr_sub_bits", sub_bits)
-        catalog.set_table_property(t, "hdr_value_col", value_col)
-        catalog.set_table_property(t, "hdr_key_cols", keys)
-    return sorted(days)
 
 
 def hdr_tvd_drift(

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from influxer_spark.operators.rollup import _trunc_unit
+from influxer_spark.tiers import build_tiers
 
 DEFAULT_K = 64
 
@@ -239,27 +240,10 @@ def build_kmv_tiers(
     job, not a second raw scan.  ``k`` is pinned as a table property: a
     reader merging sketches built with different k would silently
     under-estimate.  Returns the committed day list."""
-    keys = list(key_cols)
-    h1 = kmv_sketch(df, ts_col, keys, item_col, "1h", k).withColumn(
-        "day", F.date_format("bucket", "yyyy-MM-dd")
+    return build_tiers(
+        catalog, "kmv", kmv_sketch(df, ts_col, list(key_cols), item_col, "1h", k),
+        lambda s, keys, tier: kmv_cascade(s, keys, tier, k), key_cols, item_col, k,
     )
-    h1.persist()
-    try:
-        days = [r["day"] for r in h1.select("day").distinct().collect()]
-        catalog.write_partitions(h1, "kmv_1h", days)
-        d1 = kmv_cascade(h1.drop("day"), keys, "1d", k).withColumn(
-            "day", F.date_format("bucket", "yyyy-MM-dd")
-        )
-        catalog.write_partitions(d1, "kmv_1d", days)
-    finally:
-        h1.unpersist()
-    for t in ("kmv_1h", "kmv_1d"):
-        catalog.set_table_property(t, "kmv_k", k)
-        # pin the build inputs too, so maintenance jobs (pipeline refresh)
-        # can rebuild stale day partitions without the original call site
-        catalog.set_table_property(t, "kmv_item_col", item_col)
-        catalog.set_table_property(t, "kmv_key_cols", keys)
-    return sorted(days)
 
 
 def kmv_sliding(

@@ -88,6 +88,35 @@ def partition_deltas(
     return out
 
 
+def classify_days(
+    catalog: TableCatalog,
+    table: str,
+    source_counts: dict[str, int],
+    force_days: Sequence[str] = (),
+) -> tuple[dict[str, str], list[str], list[str]]:
+    """:func:`partition_deltas` against ``table``'s committed counters, with
+    ``force_days`` marked stale and the retention guard applied: a day whose
+    partition was ttl-EXPIRED looks "new" (source rows, no commit), and
+    refreshing it would resurrect data retention deliberately dropped, so it
+    classifies "expired" unless forced (an explicit ask wins over the
+    guard).  Returns ``(deltas, recompute, orphaned)``: the days to rebuild
+    (stale, new and forced) and the days whose source rows all vanished."""
+    deltas = partition_deltas(catalog.committed_partitions(table), source_counts)
+    for day in force_days:
+        deltas.setdefault(day, "stale")
+    for day, reason in catalog.dropped_partitions(table).items():
+        if (
+            deltas.get(day) == "new"
+            and reason.startswith("ttl")
+            and day not in force_days
+        ):
+            deltas[day] = "expired"
+    recompute = sorted(
+        d for d, kind in deltas.items() if kind not in ("orphaned", "expired")
+    )
+    orphaned = sorted(d for d, kind in deltas.items() if kind == "orphaned")
+    return deltas, recompute, orphaned
+
 def build_point_tiers(
     spark: SparkSession,
     catalog: TableCatalog,
@@ -147,26 +176,9 @@ def refresh_point_tiers(
     orphaned partitions from every tier.  Returns the classification plus
     what was done.  A no-op refresh (nothing changed) commits nothing.
     """
-    deltas = partition_deltas(
-        catalog.committed_partitions("rollup_1m"),
-        source_day_counts(points, ts_col),
+    deltas, recompute, orphaned = classify_days(
+        catalog, "rollup_1m", source_day_counts(points, ts_col), force_days
     )
-    for day in force_days:
-        deltas.setdefault(day, "stale")
-    # retention guard: a day whose partition was ttl-EXPIRED looks "new"
-    # (source rows, no commit) — refreshing it would resurrect expired data.
-    # force_days overrides (an explicit ask wins over the guard).
-    for day, reason in catalog.dropped_partitions("rollup_1m").items():
-        if (
-            deltas.get(day) == "new"
-            and reason.startswith("ttl")
-            and day not in force_days
-        ):
-            deltas[day] = "expired"
-    recompute = sorted(
-        d for d, kind in deltas.items() if kind not in ("orphaned", "expired")
-    )
-    orphaned = sorted(d for d, kind in deltas.items() if kind == "orphaned")
     if recompute:
         build_point_tiers(
             spark, catalog, points, ts_col, key_cols, value_col, days=recompute

@@ -30,6 +30,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from influxer_spark.tiers import build_tiers
+
 # tier name → (date_trunc unit, parent tier)
 TIERS: dict[str, tuple[str, str | None]] = {
     "1m": ("minute", None),
@@ -312,32 +314,11 @@ def build_sumsq_tiers(
     tier-served stddev never perturbs the committed rollup schema.  Build
     inputs are pinned as table properties for maintenance rebuilds.
     Returns the committed day list."""
-    keys = list(key_cols)
-    t1m = rollup_with_sumsq(df, ts_col, keys, value_col, "1m").withColumn(
-        "day", F.date_format("bucket", "yyyy-MM-dd")
+    return build_tiers(
+        catalog, "sumsq",
+        rollup_with_sumsq(df, ts_col, list(key_cols), value_col, "1m"),
+        cascade_with_sumsq, key_cols, value_col,
     )
-    t1m.persist()
-    try:
-        days = [r["day"] for r in t1m.select("day").distinct().collect()]
-        catalog.write_partitions(t1m, "sumsq_1m", days)
-        t1h = cascade_with_sumsq(t1m.drop("day"), keys, "1h").withColumn(
-            "day", F.date_format("bucket", "yyyy-MM-dd")
-        )
-        t1h.persist()
-        try:
-            catalog.write_partitions(t1h, "sumsq_1h", days)
-            t1d = cascade_with_sumsq(t1h.drop("day"), keys, "1d").withColumn(
-                "day", F.date_format("bucket", "yyyy-MM-dd")
-            )
-            catalog.write_partitions(t1d, "sumsq_1d", days)
-        finally:
-            t1h.unpersist()
-    finally:
-        t1m.unpersist()
-    for t in ("sumsq_1m", "sumsq_1h", "sumsq_1d"):
-        catalog.set_table_property(t, "sumsq_value_col", value_col)
-        catalog.set_table_property(t, "sumsq_key_cols", keys)
-    return sorted(days)
 
 
 def salted_rollup(
@@ -887,32 +868,10 @@ def build_ohlc_tiers(
     as separate tables like ``sumsq_*``/``kmv_*``/``hdr_*``, so opting a
     catalog into tier-served first()/last() never perturbs the committed
     rollup schema.  Returns the committed day list."""
-    keys = list(key_cols)
-    t1m = rollup_ohlc(df, ts_col, keys, value_col, "1m").withColumn(
-        "day", F.date_format("bucket", "yyyy-MM-dd")
+    return build_tiers(
+        catalog, "ohlc", rollup_ohlc(df, ts_col, list(key_cols), value_col, "1m"),
+        cascade_ohlc, key_cols, value_col,
     )
-    t1m.persist()
-    try:
-        days = [r["day"] for r in t1m.select("day").distinct().collect()]
-        catalog.write_partitions(t1m, "ohlc_1m", days)
-        t1h = cascade_ohlc(t1m.drop("day"), keys, "1h").withColumn(
-            "day", F.date_format("bucket", "yyyy-MM-dd")
-        )
-        t1h.persist()
-        try:
-            catalog.write_partitions(t1h, "ohlc_1h", days)
-            t1d = cascade_ohlc(t1h.drop("day"), keys, "1d").withColumn(
-                "day", F.date_format("bucket", "yyyy-MM-dd")
-            )
-            catalog.write_partitions(t1d, "ohlc_1d", days)
-        finally:
-            t1h.unpersist()
-    finally:
-        t1m.unpersist()
-    for t in ("ohlc_1m", "ohlc_1h", "ohlc_1d"):
-        catalog.set_table_property(t, "ohlc_value_col", value_col)
-        catalog.set_table_property(t, "ohlc_key_cols", keys)
-    return sorted(days)
 
 
 def ohlc_sliding(

@@ -41,6 +41,7 @@ from influxer_spark.catalog import TableCatalog
 from influxer_spark.extract import pages_to_points, with_crawl_metrics, with_extracted
 from influxer_spark.operators import rollup as R
 from influxer_spark.operators.intcodec import encode_dual_series_df
+from influxer_spark.tiers import TIER_FAMILIES, family_tables
 
 POINT_KEYS = ["url", "metric"]
 
@@ -509,38 +510,17 @@ def refresh_pipeline(
     Catalog-pinned histogram bounds and the Gorilla sink are re-applied
     automatically so a refreshed day is schema-identical to its siblings.
     """
-    from influxer_spark.operators.refresh import partition_deltas
+    from influxer_spark.operators.refresh import classify_days, source_day_counts
 
     t0 = time.time()
     catalog = TableCatalog(catalog_root)
     pages = spark.read.parquet(pages_path)
     res = PipelineResult()
 
-    src_counts = {
-        r["day"]: r["n"]
-        for r in pages.groupBy(_day_of("warc_ts"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    deltas = partition_deltas(
-        catalog.committed_partitions("raw_points"), src_counts
+    src_counts = source_day_counts(pages, "warc_ts")
+    deltas, recompute, orphaned = classify_days(
+        catalog, "raw_points", src_counts, force_days or ()
     )
-    for day in force_days or ():
-        deltas.setdefault(day, "stale")
-    # retention guard: a ttl-expired raw day still has source rows and no
-    # commit, so it classifies "new" — refreshing it would resurrect data
-    # the retention DAG deliberately dropped.  Explicit force_days override.
-    for day, reason in catalog.dropped_partitions("raw_points").items():
-        if (
-            deltas.get(day) == "new"
-            and reason.startswith("ttl")
-            and day not in (force_days or ())
-        ):
-            deltas[day] = "expired"
-    recompute = sorted(
-        d for d, k in deltas.items() if k not in ("orphaned", "expired")
-    )
-    orphaned = sorted(d for d, k in deltas.items() if k == "orphaned")
     res.days_skipped = sorted(d for d in src_counts if d not in deltas)
 
     if recompute:
@@ -557,100 +537,36 @@ def refresh_pipeline(
             wave_reuse=os.environ.get("SPARK_GRAFT_WAVE_REUSE", "cache"),
         )
         res.days_processed = recompute
-        # ONE shared points frame for every auxiliary tier family below
-        # (kmv/hdr/sumsq/ohlc): each family re-reading raw_points for the
-        # same recomputed days would rescan identical bytes four times.
-        # Built lazily (only when a family exists) and persisted across
-        # the family builds, from the freshly committed raw_points — never
-        # a second extraction.
-        _aux_points = None
-
-        def _recomputed_points():
-            nonlocal _aux_points
-            if _aux_points is None:
-                from influxer_spark.extract import pages_to_points
-
-                wide = catalog.read_partitions_with_key(
+        # every built tier family goes stale with the recomputed days: each
+        # rebuilds from its pinned inputs over ONE shared points frame, read
+        # lazily from the fresh raw_points (no second extraction) and
+        # persisted across the builds.  Builders resolve at call time.
+        aux = None
+        for fam in TIER_FAMILIES:
+            if fam.builder is None or not catalog.exists(fam.tables[0]):
+                continue
+            keys, value, *params = (
+                catalog.table_property(fam.tables[0], p) for p in fam.pins
+            )
+            if not (keys and value):
+                continue
+            if aux is None:
+                aux = pages_to_points(catalog.read_partitions_with_key(
                     spark, "raw_points", recompute
-                ).drop("p")
-                _aux_points = pages_to_points(wide).persist()
-            return _aux_points
-
-        # KMV sketch tiers (operators/kmv.py:build_kmv_tiers) live beside
-        # the rollups but are built separately — a refresh that skipped
-        # them would leave STALE distinct counts for the recomputed days.
-        # The build inputs are pinned as table properties, so the rebuild
-        # is autonomous; the points come from the freshly committed
-        # raw_points (the wide per-day table), never a second extraction.
-        if catalog.exists("kmv_1h"):
-            item = catalog.table_property("kmv_1h", "kmv_item_col")
-            kmv_keys = catalog.table_property("kmv_1h", "kmv_key_cols")
-            if item and kmv_keys:
-                from influxer_spark.operators.kmv import build_kmv_tiers
-
-                build_kmv_tiers(
-                    spark, catalog, _recomputed_points(), "warc_ts",
-                    list(kmv_keys), item,
-                    k=int(catalog.table_property("kmv_1h", "kmv_k")),
-                )
-        # HDR quantile-sketch tiers (operators/hdrsketch.py) follow the
-        # same contract: build inputs pinned as table properties, rebuild
-        # from the freshly committed raw_points for the recomputed days.
-        if catalog.exists("hdr_1h"):
-            vcol = catalog.table_property("hdr_1h", "hdr_value_col")
-            hkeys = catalog.table_property("hdr_1h", "hdr_key_cols")
-            if vcol and hkeys:
-                from influxer_spark.operators.hdrsketch import build_hdr_tiers
-
-                build_hdr_tiers(
-                    spark, catalog, _recomputed_points(), "warc_ts",
-                    list(hkeys), vcol,
-                    sub_bits=int(
-                        catalog.table_property("hdr_1h", "hdr_sub_bits")
-                    ),
-                )
-        # Power-sum (variance/stddev) tiers: same pinned-input contract —
-        # stale S1/S2 for a recomputed day would silently skew tier-served
-        # stddev, so they rebuild with the wave.
-        if catalog.exists("sumsq_1m"):
-            vcol = catalog.table_property("sumsq_1m", "sumsq_value_col")
-            skeys = catalog.table_property("sumsq_1m", "sumsq_key_cols")
-            if vcol and skeys:
-                from influxer_spark.operators.rollup import build_sumsq_tiers
-
-                build_sumsq_tiers(
-                    spark, catalog, _recomputed_points(), "warc_ts",
-                    list(skeys), vcol,
-                )
-        # Candlestick tiers: stale open/close for a recomputed day would
-        # silently skew tier-served first()/last() — same pinned-input
-        # rebuild contract as the families above.
-        if catalog.exists("ohlc_1m"):
-            vcol = catalog.table_property("ohlc_1m", "ohlc_value_col")
-            okeys = catalog.table_property("ohlc_1m", "ohlc_key_cols")
-            if vcol and okeys:
-                from influxer_spark.operators.rollup import build_ohlc_tiers
-
-                build_ohlc_tiers(
-                    spark, catalog, _recomputed_points(), "warc_ts",
-                    list(okeys), vcol,
-                )
-        if _aux_points is not None:
-            _aux_points.unpersist()
+                ).drop("p")).persist()
+            fam.resolve_builder()(
+                spark, catalog, aux, "warc_ts", list(keys), value,
+                *map(int, params),
+            )
+        if aux is not None:
+            aux.unpersist()
     if orphaned:
-        days = sorted(orphaned)
-        for table in (
-            "raw_points", "rollup_1m", "rollup_1m_gorilla",
-            "rollup_1m_counts",
-            "rollup_1h", "rollup_1d", "kmv_1h", "kmv_1d",
-            "hdr_1h", "hdr_1d", "sumsq_1m", "sumsq_1h", "sumsq_1d",
-            "ohlc_1m", "ohlc_1h", "ohlc_1d",
-        ):
+        for table in family_tables():
             # one snapshot per TABLE, not per (table, day)
             catalog.drop_partitions(
-                table, days, reason="refresh: source rows all deleted"
+                table, orphaned, reason="refresh: source rows all deleted"
             )
-        for day in days:
+        for day in orphaned:
             res.counters[day] = {"dropped": True}
     res.elapsed_s = time.time() - t0
     return res

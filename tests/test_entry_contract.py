@@ -51,8 +51,7 @@ def test_window_rotates_on_recorded_green_rows(tmp_path):
     assert set(window_now) <= proven
     assert "rollup_1m" not in proven
     # next-round ordering: none of the newly-proven names in the front 50
-    base = [k for k in E._WINDOW_PRIORITY if k in set(qs)]
-    base += [k for k in qs if k not in base and k not in E._WINDOW_TAIL]
+    base = [k for k in qs if k not in E._WINDOW_TAIL]
     nxt = [k for k in base if k not in proven][:50]
     assert not (set(nxt) & set(window_now))
 

@@ -165,3 +165,42 @@ def test_delete_rewrites_ohlc_tiers_too(spark, tmp_path):
         " FROM m GROUP BY time(1d), event_type"
     ).collect()
     assert rows and all(r["event_type"] == "b" for r in rows)
+
+
+def test_time_delete_drops_archive_partitions_too(spark, tmp_path):
+    """A day-aligned DELETE drops the archive tables' partitions with the
+    tiers': the archive fallback serves count/sum/mean when no rollup
+    partition covers a range, so archive days left behind would bring
+    the deleted days back."""
+    from influxer_spark.datagen import generate_pages
+    from influxer_spark.extract import (
+        pages_to_points, with_crawl_metrics, with_extracted,
+    )
+    from influxer_spark.pipeline import run_pipeline
+
+    pages = generate_pages(str(tmp_path / "pg"), n_rows=1500, seed=42, days=3)
+    root = str(tmp_path / "cat")
+    run_pipeline(spark, pages, root)
+    cat = TableCatalog(root)
+    d0, d1, _ = sorted(cat.committed_partitions("rollup_1d"))
+    points = pages_to_points(
+        with_crawl_metrics(with_extracted(spark.read.parquet(pages)))
+    )
+    eng = InfluxQLEngine({"pages": points}, ts_col="warc_ts")
+    eng.register_tiered("pages", cat, key_cols=("url", "metric"))
+    res = {r["tier_table"] for r in eng.execute_statement(
+        f"DELETE FROM pages WHERE time < '{d1}'"
+    ).collect()}
+    assert {"rollup_1m_gorilla", "rollup_1m_counts"} <= res
+    for table in ("rollup_1m_gorilla", "rollup_1m_counts"):
+        assert d0 not in cat.committed_partitions(table)
+    q = (f"SELECT count(value) FROM pages WHERE time >= '{d0}' "
+         f"AND time < '{d1}' GROUP BY time(1h), metric")
+    raw = InfluxQLEngine(
+        {"pages": points.filter(F.col("warc_ts") >= d1)}, ts_col="warc_ts"
+    )
+    assert raw.execute(q).count() == 0
+    # nothing committed is left in range: the tier path reports that
+    # instead of serving the deleted day from the archive
+    with pytest.raises(InfluxQLError, match="no committed"):
+        eng.execute(q).collect()
