@@ -134,16 +134,29 @@ def run_pipeline_bench(cores: int, pages_path: str, warm: bool = True) -> dict:
         elapsed = time.time() - t0
         points = sum(c.get("points", 0) for c in res.counters.values())
 
-        # continuous-aggregate payoff: a 4h GROUP BY answered from the 1h
-        # tier vs recomputed from raw points
         from influxer_spark.catalog import TableCatalog
         from influxer_spark.extract import (
             pages_to_points, with_crawl_metrics, with_extracted,
         )
         from influxer_spark.operators.rollup import rollup_width
         from influxer_spark.query import read_rollup
+        from influxer_spark.tiers import FAMILIES
 
+        # the catalog layout: bytes on disk per point, and the most files
+        # any (table, day) holds — above 1 when AQE split a large day
         cat = TableCatalog(root)
+        catalog_bytes = sum(
+            os.path.getsize(os.path.join(d, f))
+            for d, _, files in os.walk(root) for f in files
+        )
+        max_files = max(
+            sum(f.endswith(".parquet") for f in os.listdir(path))
+            for t in FAMILIES["pipeline"].tables if cat.exists(t)
+            for path in cat.partition_paths(t, list(cat.committed_partitions(t)))
+        )
+
+        # continuous-aggregate payoff: a 4h GROUP BY answered from the 1h
+        # tier vs recomputed from raw points
         t0 = time.time()
         read_rollup(spark, cat, 4 * 3600).write.mode("overwrite").format(
             "noop"
@@ -179,6 +192,8 @@ def run_pipeline_bench(cores: int, pages_path: str, warm: bool = True) -> dict:
             "gorilla_bytes_per_point": round(sum(bpp) / len(bpp), 3) if bpp else None,
             "int_bytes_per_point": round(sum(ipp) / len(ipp), 3) if ipp else None,
             "sum_bytes_per_point": round(sum(spp) / len(spp), 3) if spp else None,
+            "catalog_bytes_per_point": round(catalog_bytes / points, 2),
+            "max_files_per_table_day": max_files,
             "tier_query_4h_s": round(t_tier, 3),
             "raw_query_4h_s": round(t_raw, 3),
             "tier_query_speedup": round(t_raw / t_tier, 1) if t_tier else None,
@@ -295,6 +310,8 @@ def main() -> None:
         "gorilla_bytes_per_point": pipe["gorilla_bytes_per_point"],
         "int_bytes_per_point": pipe.get("int_bytes_per_point"),
         "sum_bytes_per_point": pipe.get("sum_bytes_per_point"),
+        "catalog_bytes_per_point": pipe["catalog_bytes_per_point"],
+        "max_files_per_table_day": pipe["max_files_per_table_day"],
         "tier_query_speedup_4h": pipe.get("tier_query_speedup"),
         "pages_rows": BENCH_PAGES_ROWS,
         "cpus": CPUS,

@@ -46,12 +46,15 @@ import tempfile
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
 _MANIFEST_RE = re.compile(r"_manifest\.v(\d+)\.json$")
 _MISSING = object()  # sentinel: "property not set" ≠ "property is None"
+# table property: the column order every write of the table sorts each
+# partition's file by (Iceberg's ``write.sort-order``)
+SORT_ORDER = "sort_order"
 
 
 def zorder_key(df: DataFrame, cols: list[str], bits: int = 8):
@@ -833,6 +836,67 @@ class TableCatalog:
         self._commit_apply(name, _apply)
         return entry
 
+    def _stage(
+        self,
+        df: DataFrame,
+        name: str,
+        partition_values: Iterable[str],
+        part_col: str,
+        sort_cols: Sequence[str] | None = None,
+        stats_cols: list[str] | None = None,
+    ) -> tuple[dict[str, str], dict[str, dict[str, Any]]]:
+        """The one stage-and-rename step under every multi-partition write
+        and rewrite.  Rows cluster by ``part_col`` (``REBALANCE``: AQE
+        merges small values into one task and splits a value only when it
+        outgrows the advisory partition size), sort within each task by
+        ``part_col`` then ``sort_cols`` (when None, the table's recorded
+        order, minus columns this frame lacks), and land
+        ``partitionBy(part_col)`` in a private staging dir.  Each value is
+        thus ONE sorted file unless it is big enough to be worth several.
+        Each staged value then renames into a fresh immutable
+        ``p=<value>/v=<uuid>`` dir.
+
+        Returns ``({value: vdir}, {value: stats})`` for the values that
+        staged rows (zero-row values get no dir).  Nothing is visible until
+        the caller commits a manifest naming the dirs; a crash before that
+        leaves orphans that :meth:`expire_snapshots` sweeps."""
+        if sort_cols is None:
+            sort_cols = [
+                c for c in self.table_property(name, SORT_ORDER, [])
+                if c in df.columns
+            ]
+        tdir = self.table_path(name)
+        staging = os.path.join(tdir, f".wave-{uuid.uuid4().hex[:8]}")
+        (
+            df.hint("rebalance", part_col)
+            .sortWithinPartitions(part_col, *sort_cols)
+            .write.mode("overwrite")
+            .partitionBy(part_col)
+            .parquet(staging)
+        )
+        staged = [
+            pv for pv in dict.fromkeys(partition_values)
+            if os.path.exists(os.path.join(staging, f"{part_col}={pv}"))
+        ]
+        stats: dict[str, dict[str, Any]] = {}
+        if stats_cols and staged:
+            # one partial-aggregated job over the just-staged bytes (not the
+            # input plan, which may be expensive to recompute) — the same
+            # footer-derived metadata an Iceberg writer commits
+            stats = self._collect_stats(
+                df.sparkSession.read.parquet(staging), stats_cols, part_col
+            )
+        vdirs: dict[str, str] = {}
+        for pv in staged:
+            vdir = f"v={uuid.uuid4().hex[:8]}"
+            pdir = os.path.join(tdir, f"p={pv}")
+            os.makedirs(pdir, exist_ok=True)
+            os.replace(os.path.join(staging, f"{part_col}={pv}"),
+                       os.path.join(pdir, vdir))
+            vdirs[pv] = vdir
+        shutil.rmtree(staging, ignore_errors=True)
+        return vdirs, stats
+
     def write_partitions(
         self,
         df: DataFrame,
@@ -843,46 +907,37 @@ class TableCatalog:
         lineage_by_partition: dict[str, dict[str, Any]] | None = None,
         stats_cols: list[str] | None = None,
         branch: str | None = None,
+        sort_cols: Sequence[str] | None = None,
     ) -> None:
         """Idempotently (over)write MANY partitions of ``name`` in ONE Spark
-        job (``partitionBy`` into staging, then per-partition rename into
-        immutable ``v=`` dirs + ONE snapshot commit).
+        job and ONE snapshot commit, each partition as one file sorted by
+        the table's sort order (see :meth:`_stage`).
 
-        This is the wave-mode commit path: at 1000-executor scale, pending
-        partitions are processed as one job wave, not a serial loop — the
-        per-partition granularity survives only in the COMMIT (manifest) and
-        RESUME (pending-set) logic, never in job structure.  A crash between
-        renames and the snapshot-pointer flip leaves the previous snapshot
-        authoritative and every previously committed byte on disk; resume
-        redoes the whole wave (partition-level exactly-once).  Partition
-        values with zero staged rows get no manifest entry.
+        ``sort_cols`` names that order and is recorded in the same data
+        commit (Iceberg's ``write.sort-order``); a write that names none
+        re-applies the recorded order, as do the rewrites
+        (:meth:`delete_where`, :meth:`update_where`, :meth:`merge_into`).
+        Sorted files make parquet row-group min/max selective on the
+        leading columns, and one file per partition leaves binpack
+        compaction nothing to do.
+
+        This is the wave-mode commit path: pending partitions are written
+        as one job, not a serial loop — the per-partition granularity
+        survives only in the COMMIT (manifest) and RESUME (pending-set)
+        logic.  A crash between the renames and the snapshot-pointer flip
+        leaves the previous snapshot authoritative and every previously
+        committed byte on disk; resume redoes the whole wave
+        (partition-level exactly-once).  Partition values with zero staged
+        rows get no manifest entry.
         """
-        staging = os.path.join(self.table_path(name), f".wave-{uuid.uuid4().hex[:8]}")
-        df.write.mode("overwrite").partitionBy(day_col).parquet(staging)
-        stats_by_pv: dict[str, dict[str, Any]] = {}
-        if stats_cols and any(
-            os.path.exists(os.path.join(staging, f"{day_col}={pv}"))
-            for pv in partition_values
-        ):
-            # one partial-aggregated job over the just-staged bytes (not the
-            # input plan, which may be expensive to recompute) — the same
-            # footer-derived metadata an Iceberg writer commits
-            staged = df.sparkSession.read.parquet(staging)
-            stats_by_pv = self._collect_stats(staged, stats_cols, day_col)
-        # move staged dirs into place ONCE; the manifest mutation below is
-        # metadata-only and re-runnable, so a commit conflict (concurrent
-        # writer on this table) rebases and reapplies instead of failing
+        vdirs, stats_by_pv = self._stage(
+            df, name, partition_values, day_col, sort_cols, stats_cols
+        )
+        # the manifest mutation below is metadata-only and re-runnable, so a
+        # commit conflict (concurrent writer on this table) rebases and
+        # reapplies instead of failing
         entries: dict[str, dict[str, Any]] = {}
-        for pv in partition_values:
-            src = os.path.join(staging, f"{day_col}={pv}")
-            if not os.path.exists(src):
-                # zero rows staged for this value: no data dir, no manifest
-                # entry — committing one would make read_partition throw later
-                continue
-            vdir = f"v={uuid.uuid4().hex[:8]}"
-            pdir = os.path.join(self.table_path(name), f"p={pv}")
-            os.makedirs(pdir, exist_ok=True)
-            os.replace(src, os.path.join(pdir, vdir))
+        for pv, vdir in vdirs.items():
             entry = {
                 "committed_at": time.time(),
                 "dir": vdir,
@@ -900,6 +955,8 @@ class TableCatalog:
 
         def _apply(manifest: dict[str, Any]) -> None:
             manifest["schema"] = schema_json
+            if sort_cols is not None:
+                manifest.setdefault("properties", {})[SORT_ORDER] = list(sort_cols)
             for pv, entry in entries.items():
                 manifest["partitions"][pv] = entry
                 manifest["lineage"].append({"partition": pv, **entry})
@@ -907,7 +964,6 @@ class TableCatalog:
         # branch commits fork from the BRANCH head, not main — the branch
         # accumulates its own partition map until fast_forward publishes it
         self._commit_apply(name, _apply, branch=branch)
-        shutil.rmtree(staging, ignore_errors=True)
 
     def amend_partition_counters(
         self, name: str, counters_by_partition: dict[str, dict[str, Any]]
@@ -951,26 +1007,15 @@ class TableCatalog:
         Returns the token: {"table", "schema", "entries": {pv: vdir},
         "paths": [staged dirs]}.
         """
-        staging = os.path.join(self.table_path(name), f".wave-{uuid.uuid4().hex[:8]}")
-        df.write.mode("overwrite").partitionBy(day_col).parquet(staging)
-        entries: dict[str, str] = {}
-        paths: list[str] = []
-        for pv in partition_values:
-            src = os.path.join(staging, f"{day_col}={pv}")
-            if not os.path.exists(src):
-                continue
-            vdir = f"v={uuid.uuid4().hex[:8]}"
-            pdir = os.path.join(self.table_path(name), f"p={pv}")
-            os.makedirs(pdir, exist_ok=True)
-            os.replace(src, os.path.join(pdir, vdir))
-            entries[pv] = vdir
-            paths.append(os.path.join(pdir, vdir))
-        shutil.rmtree(staging, ignore_errors=True)
+        entries, _ = self._stage(df, name, partition_values, day_col)
         return {
             "table": name,
             "schema": json.loads(df.drop(day_col).schema.json()),
             "entries": entries,
-            "paths": paths,
+            "paths": [
+                os.path.join(self.table_path(name), f"p={pv}", vdir)
+                for pv, vdir in entries.items()
+            ],
         }
 
     def read_staged(self, spark: SparkSession, token: dict[str, Any]) -> DataFrame:
@@ -1074,15 +1119,12 @@ class TableCatalog:
         if not hits:
             return out
         rewritten = sorted(pv for pv, (m, t) in hits.items() if m < t)
-        staging = os.path.join(self.table_path(name), f".delete-{uuid.uuid4().hex[:8]}")
+        vdirs: dict[str, str] = {}
         if rewritten:
-            (
-                self.read_partitions_with_key(spark, name, rewritten)
-                .filter(~pred)
-                .write.mode("overwrite")
-                .partitionBy("p")
-                .parquet(staging)
-            )
+            survivors = self.read_partitions_with_key(
+                spark, name, rewritten
+            ).filter(~pred)
+            vdirs, _ = self._stage(survivors, name, rewritten, "p")
         manifest = self.read_manifest(name)
         for pv in sorted(hits):
             matched, total = hits[pv]
@@ -1099,14 +1141,9 @@ class TableCatalog:
                 )
                 out["partitions_dropped"] += 1
                 continue
-            src = os.path.join(staging, f"p={pv}")
-            vdir = f"v={uuid.uuid4().hex[:8]}"
-            pdir = os.path.join(self.table_path(name), f"p={pv}")
-            os.makedirs(pdir, exist_ok=True)
-            os.replace(src, os.path.join(pdir, vdir))
             entry = {
                 "committed_at": time.time(),
-                "dir": vdir,
+                "dir": vdirs[pv],
                 "counters": {"rows_deleted": matched, "rows_kept": total - matched},
                 "lineage": {"op": "delete_where", "predicate": str(predicate),
                             "reason": reason},
@@ -1117,7 +1154,6 @@ class TableCatalog:
             )
             out["partitions_rewritten"] += 1
         self._commit_manifest(name, manifest)
-        shutil.rmtree(staging, ignore_errors=True)
         return out
 
     def update_where(
@@ -1178,18 +1214,12 @@ class TableCatalog:
             )
         for c in set_exprs:
             updated = updated.withColumn(c, F.col(f"__new_{c}")).drop(f"__new_{c}")
-        staging = os.path.join(self.table_path(name), f".update-{uuid.uuid4().hex[:8]}")
-        updated.write.mode("overwrite").partitionBy("p").parquet(staging)
+        vdirs, _ = self._stage(updated, name, affected, "p")
         manifest = self.read_manifest(name)
         for pv in affected:
-            src = os.path.join(staging, f"p={pv}")
-            vdir = f"v={uuid.uuid4().hex[:8]}"
-            pdir = os.path.join(self.table_path(name), f"p={pv}")
-            os.makedirs(pdir, exist_ok=True)
-            os.replace(src, os.path.join(pdir, vdir))
             entry = {
                 "committed_at": time.time(),
-                "dir": vdir,
+                "dir": vdirs[pv],
                 "counters": {"rows_updated": hits[pv]},
                 "lineage": {"op": "update_where", "predicate": predicate,
                             "reason": reason},
@@ -1201,7 +1231,6 @@ class TableCatalog:
             out["partitions_rewritten"] += 1
             out["rows_updated"] += hits[pv]
         self._commit_manifest(name, manifest)
-        shutil.rmtree(staging, ignore_errors=True)
         return out
 
     def merge_into(
@@ -1523,11 +1552,14 @@ class TableCatalog:
         """Bin-pack one partition's small files into ~``target_file_mb``
         outputs (Iceberg's ``rewrite_data_files`` binpack strategy).
 
-        Streaming commits (streaming/incremental.py) and per-day waves leave
-        many small parquet files; at scale, scan task count — and the
-        NameNode/S3 listing cost — tracks file count, so compaction is what
-        keeps the 1000-executor read path at ``maxPartitionBytes``-sized
-        splits.  The rewrite lands in a NEW immutable ``v=`` dir + snapshot
+        Streaming commits (streaming/incremental.py) and
+        :meth:`write_partition` of a many-task frame leave many small
+        parquet files; at scale, scan task count — and the NameNode/S3
+        listing cost — tracks file count, so compaction is what keeps the
+        1000-executor read path at ``maxPartitionBytes``-sized splits.  The
+        wave writes (:meth:`write_partitions` and the rewrites) already land
+        one file per partition, so binpack leaves their partitions as they
+        are.  The rewrite lands in a NEW immutable ``v=`` dir + snapshot
         commit (data identical, counters/lineage preserved, a ``compaction``
         note added) — readers never see a half-compacted partition, and time
         travel to the pre-compaction snapshot still works until

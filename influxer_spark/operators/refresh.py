@@ -144,20 +144,27 @@ def build_point_tiers(
         return []
     work = src.filter(F.col("day").isin(wave)) if days is not None else src
     counters = {d: {"rows_in": counts[d]} for d in wave}
+    order = (*key_cols, "bucket")
 
     t1m = (
         R.rollup(work, ts_col, key_cols, value_col, "1m")
         .withColumn("day", _day("bucket"))
         .cache()
     )
-    catalog.write_partitions(t1m, "rollup_1m", wave, counters_by_partition=counters)
+    catalog.write_partitions(
+        t1m, "rollup_1m", wave, counters_by_partition=counters, sort_cols=order
+    )
     t1h = R.cascade(t1m.drop("day"), key_cols, "1h").withColumn("day", _day("bucket"))
-    catalog.write_partitions(t1h, "rollup_1h", wave, counters_by_partition=counters)
+    catalog.write_partitions(
+        t1h, "rollup_1h", wave, counters_by_partition=counters, sort_cols=order
+    )
     # 1d cascades from the COMMITTED 1h (read-back, same as the pipeline:
     # proves the committed bytes, not the in-memory lineage)
     t1h_c = catalog.read_partitions_with_key(spark, "rollup_1h", wave).drop("p")
     t1d = R.cascade(t1h_c, key_cols, "1d").withColumn("day", _day("bucket"))
-    catalog.write_partitions(t1d, "rollup_1d", wave, counters_by_partition=counters)
+    catalog.write_partitions(
+        t1d, "rollup_1d", wave, counters_by_partition=counters, sort_cols=order
+    )
     t1m.unpersist()
     return wave
 

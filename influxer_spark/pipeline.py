@@ -12,8 +12,10 @@ Influxer/ProcessStatus.cs:3-9) + lineage per partition.
 
 Scale notes:
 - Days are a CHECKPOINT boundary, not a job boundary: all pending days run
-  in one wave of ~9 Spark jobs TOTAL (scan+extract, 5 partitioned writes,
-  3 small counter aggs) regardless of day count.  A serial per-day loop had
+  in one wave of a fixed job count regardless of day count — 29 Spark jobs
+  traced on a 4-day wave with Gorilla on (scan+extract, six partitioned
+  writes each behind the AQE rebalance that makes one sorted file per
+  day, the codec encode and small counter aggs).  A serial per-day loop had
   a fixed multi-second driver+job overhead per day that capped scaling
   efficiency at ~0.4 (Amdahl); the wave removes that serial floor — extra
   executors now shorten every stage.
@@ -44,6 +46,13 @@ from influxer_spark.operators.intcodec import encode_dual_series_df
 from influxer_spark.tiers import TIER_FAMILIES, family_tables
 
 POINT_KEYS = ["url", "metric"]
+# Per-table sort orders of the wave's files (recorded as each table's
+# sort_order).  Metric leads on the rollup tiers: (metric, url, bucket)
+# files came out smaller than (url, metric, bucket) on the 6,000-page
+# perfbench table, and metric is the usual filter tag.
+RAW_SORT = ("url", "warc_ts")
+TIER_SORT = ("metric", "url", "bucket")
+ARCHIVE_SORT = ("series_keys",)
 
 # Each page emits one point per crawl metric (html_bytes, text_chars,
 # n_tokens, text_ratio) — the page→point fan-out used to size a wave.
@@ -212,7 +221,8 @@ def process_days(
         # multiply it) and rollup_1d, the resume marker, still commits
         # last, so a guard-failed wave re-runs whole.
         catalog.write_partitions(
-            wide, "raw_points", days, lineage_by_partition=lineage
+            wide, "raw_points", days, lineage_by_partition=lineage,
+            sort_cols=RAW_SORT,
         )
         wide = catalog.read_partitions_with_key(
             spark, "raw_points", days
@@ -326,6 +336,7 @@ def process_days(
                 wide, "raw_points", days,
                 counters_by_partition=raw_counters,
                 lineage_by_partition=lineage,
+                sort_cols=RAW_SORT,
             )
         # materialize the t1m cache (and collect b1m) while raw_points writes;
         # downstream threads then read the cache, never recompute the rollup
@@ -340,6 +351,7 @@ def process_days(
                 d: {"rows_in": stats[d]["points_n"]} for d in days
             },
             lineage_by_partition=lineage,
+            sort_cols=TIER_SORT,
         )
         f_gor = None
         f_cnt = None
@@ -390,6 +402,7 @@ def process_days(
                         d: {"rows_in": b1m[d]} for d in days
                     },
                     lineage_by_partition=lineage,
+                    sort_cols=ARCHIVE_SORT,
                 )
 
             f_gor = pool.submit(_after_dual, enc, "rollup_1m_gorilla")
@@ -409,6 +422,7 @@ def process_days(
             t1h, "rollup_1h", days,
             counters_by_partition={d: {"rows_in": b1m[d]} for d in days},
             lineage_by_partition=lineage,
+            sort_cols=TIER_SORT,
         )
         t1h_committed = catalog.read_partitions_with_key(
             spark, "rollup_1h", days
@@ -429,6 +443,7 @@ def process_days(
             t1d, "rollup_1d", days,
             counters_by_partition={d: {"rows_in": b1m[d]} for d in days},
             lineage_by_partition=lineage,
+            sort_cols=TIER_SORT,
         )
 
         if hist_bounds:
@@ -548,7 +563,7 @@ def refresh_pipeline(
             keys, value, *params = (
                 catalog.table_property(fam.tables[0], p) for p in fam.pins
             )
-            if not (keys and value):
+            if keys is None or value is None:
                 continue
             if aux is None:
                 aux = pages_to_points(catalog.read_partitions_with_key(

@@ -98,16 +98,17 @@ def build_tiers(
     family's pins on every table.  Returns the committed day list."""
     fam = FAMILIES[family]
     keys = list(key_cols)
+    order = (*keys, "bucket")
     cur = _with_day(first).persist()
     held = [cur]
     try:
         days = [r["day"] for r in cur.select("day").distinct().collect()]
-        catalog.write_partitions(cur, fam.tables[0], days)
+        catalog.write_partitions(cur, fam.tables[0], days, sort_cols=order)
         for table in fam.tables[1:]:
             cur = _with_day(cascade(cur.drop("day"), keys, table.split("_")[1]))
             if table != fam.tables[-1]:
                 held.append(cur.persist())
-            catalog.write_partitions(cur, table, days)
+            catalog.write_partitions(cur, table, days, sort_cols=order)
     finally:
         for df in reversed(held):
             df.unpersist()

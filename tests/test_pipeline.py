@@ -643,10 +643,10 @@ def test_compaction_binpacks_files_preserving_data(tmp_path, spark):
     import os
 
     cat = TableCatalog(str(tmp_path / "c"))
-    df = spark.range(1000).select(
-        F.col("id"), F.lit("2024-01-01").alias("day")
-    ).repartition(16)
-    cat.write_partitions(df, "t", ["2024-01-01"])
+    # write_partition writes the frame as given: one file per task (the
+    # wave writes cluster each partition into one file, nothing to binpack)
+    df = spark.range(1000).select(F.col("id")).repartition(16)
+    cat.write_partition(df, "t", "2024-01-01")
     s1 = cat.current_snapshot("t")
     pdir = os.path.join(cat.table_path("t"), "p=2024-01-01")
     before = cat.committed_partitions("t")["2024-01-01"]["dir"]
@@ -673,6 +673,50 @@ def test_compaction_binpacks_files_preserving_data(tmp_path, spark):
     cat.expire_snapshots("t", keep_last=1)
     assert sorted(os.listdir(pdir)) == [entry["dir"]]
     assert cat.read_committed(spark, "t").count() == 1000
+
+
+def test_wave_commits_one_sorted_file_per_table_day(spark, tmp_path):
+    """Every catalog commit clusters rows by day and sorts them by the
+    table's recorded order: after a wave (Gorilla on) each committed
+    partition of each pipeline table is ONE parquet file in that order,
+    binpack compaction has nothing left to do, and a delete_where rewrite
+    of one day keeps the layout."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from influxer_spark.catalog import SORT_ORDER
+    from influxer_spark.tiers import FAMILIES
+
+    pages = generate_pages(str(tmp_path / "pg"), n_rows=1500, seed=11, days=3)
+    root = str(tmp_path / "cat")
+    run_pipeline(spark, pages, root, resume=False, encode_gorilla=True)
+    cat = TableCatalog(root)
+
+    def assert_one_sorted_file(table, pv):
+        live = cat.partition_paths(table, [pv])[0]
+        files = glob.glob(os.path.join(live, "*.parquet"))
+        assert len(files) == 1, (table, pv, files)
+        order = cat.table_property(table, SORT_ORDER)
+        assert order, table
+        rows = pq.read_table(files[0], columns=order).to_pylist()
+        keys = [tuple(r[c] for c in order) for r in rows]
+        assert keys == sorted(keys), (table, pv, order)
+
+    for table in FAMILIES["pipeline"].tables:
+        pvs = sorted(cat.committed_partitions(table))
+        assert len(pvs) >= 3, table
+        for pv in pvs:
+            assert_one_sorted_file(table, pv)
+        assert cat.compact(spark, table)["rewritten"] == 0, table
+
+    day = sorted(cat.committed_partitions("rollup_1m"))[0]
+    res = cat.delete_where(
+        spark, "rollup_1m", f"p = '{day}' AND metric = 'n_tokens'"
+    )
+    assert res["partitions_rewritten"] == 1 and res["rows_deleted"] > 0
+    assert_one_sorted_file("rollup_1m", day)
 
 
 def test_hist_bounds_fixed_at_catalog_creation(spark, tmp_path):
@@ -794,7 +838,8 @@ def test_compaction_sort_strategy_clusters_rows(tmp_path, spark):
     import pyarrow.parquet as pq
 
     cat = TableCatalog(str(tmp_path / "c"))
-    # two interleaved writes → a 2-file partition with mixed metrics
+    # one wave write with no sort order → a one-file partition whose
+    # metrics stay interleaved
     df = spark.range(2000).select(
         F.col("id"),
         F.concat(F.lit("m"), (F.col("id") % 7).cast("string")).alias("metric"),

@@ -248,6 +248,51 @@ def test_refresh_rebuilds_kmv_sketch_tiers(spark, tmp_path):
     assert _sketches(cat) == _sketches(fresh)
 
 
+def test_refresh_rebuilds_kmv_tiers_pinned_with_empty_keys(spark, tmp_path):
+    """A family pinned with NO key columns (one sketch per bucket) is still
+    built and must still be rebuilt: a pinned ``[]`` is a value, not a
+    missing pin."""
+    from influxer_spark.datagen import generate_pages
+    from influxer_spark.extract import (
+        pages_to_points,
+        with_crawl_metrics,
+        with_extracted,
+    )
+    from influxer_spark.operators.kmv import build_kmv_tiers
+    from influxer_spark.pipeline import refresh_pipeline, run_pipeline
+
+    src = str(tmp_path / "pg")
+    generate_pages(src, n_rows=700, seed=53, days=2)
+    late = generate_pages(str(tmp_path / "late"), n_rows=300, seed=54, days=2)
+
+    def _points(path):
+        return pages_to_points(
+            with_crawl_metrics(with_extracted(spark.read.parquet(path)))
+        )
+
+    root = str(tmp_path / "cat")
+    run_pipeline(spark, src, root, encode_gorilla=False)
+    cat = TableCatalog(root)
+    build_kmv_tiers(spark, cat, _points(src), "warc_ts", [], "url", k=32)
+
+    shutil.copy(late, f"{src}/late.parquet")
+    res = refresh_pipeline(spark, src, root)
+    assert res.days_processed
+
+    fresh_root = str(tmp_path / "fresh")
+    run_pipeline(spark, src, fresh_root, encode_gorilla=False)
+    fresh = TableCatalog(fresh_root)
+    build_kmv_tiers(spark, fresh, _points(src), "warc_ts", [], "url", k=32)
+
+    def _sketches(c):
+        return sorted(
+            (r["bucket"], tuple(r["hashes"]))
+            for r in c.read(spark, "kmv_1d").select("bucket", "hashes").collect()
+        )
+
+    assert _sketches(cat) == _sketches(fresh)
+
+
 def test_refresh_rebuilds_hdr_sketch_tiers(spark, tmp_path):
     """HDR quantile-sketch tiers built beside the rollups must be rebuilt
     for refreshed days — stale sketches would serve wrong percentiles.
