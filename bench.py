@@ -97,6 +97,22 @@ def _warm_pipeline(spark, pages_path: str) -> None:
         shutil.rmtree(root, ignore_errors=True)
 
 
+def _driver_heap(cores: int) -> str:
+    """SPARK_DRIVER_MEMORY for a bench process: 2 GiB per core (how real
+    executors are sized), at most 64 GiB and at most 40% of the host's
+    MemTotal — the JVM's resident set runs well past its heap (cached
+    frames, Arrow buffers, Python workers), and a 2·cores heap on a host
+    with little memory per core gets the process OOM-killed."""
+    gib = min(2 * cores, 64)
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+        gib = min(gib, int(0.4 * kib / 2**20))
+    except (OSError, StopIteration, ValueError):
+        pass
+    return f"{max(gib, 1)}g"
+
+
 def run_pipeline_bench(cores: int, pages_path: str, warm: bool = True) -> dict:
     """One pipeline run at the given parallelism; returns throughput stats."""
     from influxer_spark.pipeline import run_pipeline
@@ -115,7 +131,7 @@ def run_pipeline_bench(cores: int, pages_path: str, warm: bool = True) -> dict:
     # memory scales WITH cores (2 GiB/core), as real executors are sized —
     # a flat heap over-provisions the small-N side per core and starves the
     # large-N side (cache eviction + spill), biasing scaling efficiency down
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", f"{2 * cores}g")
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", _driver_heap(cores))
     spark = get_spark(
         f"bench_pipeline_{cores}", cores=cores,
         extra_conf={"spark.sql.files.maxPartitionBytes": str(mpb)},
@@ -264,7 +280,7 @@ def main() -> None:
     # 23s vs 9s for the identical pipeline at 2 GiB/core (how real
     # executors are sized, and what run_pipeline_bench sets when it owns
     # the process)
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", f"{min(2 * CPUS, 64)}g")
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", _driver_heap(CPUS))
     spark = get_spark("bench", cores=CPUS)
     qs = E.queries()
     timings: dict[str, float] = {}

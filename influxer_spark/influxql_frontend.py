@@ -2048,6 +2048,13 @@ class InfluxQLEngine:
             )
             and cat.exists("rollup_1m_counts")
         )
+        if has_raw and cfg["as_of"] is None and not any(
+            _qapi._partitions_in_range(cat, t, start, end)
+            for t in ((table, "rollup_1m_counts") if archive else (table,))
+        ):
+            # e.g. a day-aligned DELETE emptied the range: the raw frame
+            # answers it (the tiers would only report the gap)
+            return Raw(f"no committed {table} partitions in range")
         return Route(family, table, modulus, start, end, tail, archive)
 
     def _where_bounds(
@@ -3137,7 +3144,8 @@ class InfluxQLEngine:
 
         cfg = self.tiered[name]
         cat = cfg["catalog"]
-        keyset = set(cfg["key_cols"])
+        key_cols = list(cfg["key_cols"])
+        keyset = set(key_cols)
         if isinstance(cond, Bool) and cond.op != "and":
             raise InfluxQLError("tiered DELETE supports AND-only predicates")
         parts = (
@@ -3145,6 +3153,9 @@ class InfluxQLEngine:
             [] if cond is None else [cond]
         )
         pred = None
+        # the tag conjuncts on the archives, whose series_keys hold
+        # [day, *key_cols] (the mapping query.read_series reads them by)
+        archive_pred = None
         lo_day = hi_day = None
         tag_cols: set[str] = set()
         for c in parts:
@@ -3180,8 +3191,15 @@ class InfluxQLEngine:
                     hi_day = day if hi_day is None else min(hi_day, day)
             elif (isinstance(c.left, Ref) and c.left.name in keyset
                   and isinstance(c.right, Str) and c.op in ("=", "!=")):
-                col = (F.col(c.left.name) == c.right.value) if c.op == "=" \
-                    else (F.col(c.left.name) != c.right.value)
+                def hit(ref: Any) -> Any:
+                    return (ref == c.right.value) if c.op == "=" \
+                        else (ref != c.right.value)
+
+                col = hit(F.col(c.left.name))
+                arch = hit(F.element_at(
+                    "series_keys", key_cols.index(c.left.name) + 2))
+                archive_pred = arch if archive_pred is None \
+                    else (archive_pred & arch)
                 tag_cols.add(c.left.name)
             else:
                 raise InfluxQLError(
@@ -3195,10 +3213,26 @@ class InfluxQLEngine:
         # aggregate ACROSS the missing tag, so a predicate on it cannot be
         # expressed exactly there — and failing mid-loop would leave the
         # rollup tiers already rewritten while the sketch tiers still hold
-        # the series (the drift this method exists to prevent).
+        # the series (the drift this method exists to prevent).  The
+        # archives carry the tags inside ``series_keys`` as [day,
+        # *key_cols]; one stored row shows whether the registration's key
+        # columns map onto them.
+        archives = set(family_tables()) - set(family_tables(archives=False))
         if tag_cols:
-            for table in family_tables(raw=False, archives=False):
+            for table in family_tables(raw=False):
                 if not cat.exists(table):
+                    continue
+                if table in archives:
+                    parts = sorted(cat.committed_partitions(table))[:1]
+                    row = parts and spark.read.parquet(
+                        *cat.partition_paths(table, parts)
+                    ).select(F.size("series_keys")).head()
+                    if row and row[0] != len(key_cols) + 1:
+                        raise InfluxQLError(
+                            f"tiered DELETE: archive {table!r} keys series by "
+                            f"{row[0] - 1} tag(s), the measurement registers "
+                            f"{key_cols}; re-register it with the archive's "
+                            f"key columns (no tier was modified)")
                     continue
                 cols = cat.table_columns(table)
                 missing = tag_cols - set(cols or ())
@@ -3211,17 +3245,14 @@ class InfluxQLEngine:
                         f"and refresh it from the raw data instead "
                         f"(no tier was modified)")
         out: dict[str, dict] = {}
-        time_only = pred is None or not any(
-            isinstance(c, Cmp)
-            and not (self._is_time(c.left) or self._is_time(c.right))
-            for c in parts
-        )
-        # every family's tier tables (tiers.TIER_FAMILIES), or the families
-        # drift out of sync.  Whole-partition deletes drop the archives
-        # too, else the archive fallback serves the deleted days; they key
-        # series by ``series_keys``, not tag columns, so a tag predicate
-        # cannot reach them.
-        for table in family_tables(raw=False, archives=time_only):
+        time_only = archive_pred is None
+        # every family's tables (tiers.TIER_FAMILIES), archives included,
+        # or the families drift out of sync: the archive fallback would
+        # serve deleted days or series once retention expires the rollups.
+        # The archives hold one row per (day, series), so a tag predicate
+        # on series_keys deletes whole series exactly; their day
+        # partitions carry the time bounds.
+        for table in family_tables(raw=False):
             if not cat.exists(table):
                 continue
             candidates = None
@@ -3245,7 +3276,7 @@ class InfluxQLEngine:
                               "partitions_rewritten": 0, "rows_deleted": -1}
                 continue
             out[table] = cat.delete_where(
-                spark, table, pred,
+                spark, table, archive_pred if table in archives else pred,
                 reason=f"InfluxQL DELETE FROM {name}",
                 partitions=candidates,
             )

@@ -7,12 +7,23 @@ encoding is the Gorilla XOR scheme (Pelkonen et al., "Gorilla: A Fast,
 Scalable, In-Memory Time Series Database", VLDB 2015 §4.1-4.2).  Implemented
 natively here:
 
-- timestamps: header stores t0; first delta as 64 bits; subsequent
-  delta-of-deltas in Gorilla's prefix-coded buckets
-  ``0 | 10+7b | 110+9b | 1110+12b | 1111+64b``
+- header: the point count as a 32-bit word whose top bit marks this
+  layout, then t0, the first delta and the delta-of-delta divisor as
+  varints (each only when the series has one);
+- timestamps: the delta-of-deltas divided by their GCD, in Gorilla's
+  prefix-coded buckets ``0 | 10+7b | 110+9b | 1110+12b | 1111+64b``.
+  Archive series are sparse bucket starts — every gap a multiple of 60 s —
+  so dividing out the common factor (TSM's "divide timestamps by their
+  common factor" step) keeps their dods in the short buckets;
 - values: first stored raw (64 bits); then XOR with predecessor —
   ``0`` if identical, ``10`` + meaningful bits reusing the previous
   leading/length window, ``11`` + 5b leading + 6b length + bits otherwise.
+
+:func:`divide_stream` and the varint helpers below are shared with the
+simple8b codec (intcodec.py): every packed delta stream is divided by its
+GCD the same way.  Blobs written before the layout carried its mark fail
+to decode with ``ValueError``; rebuild such an archive with
+``refresh_pipeline(..., force_days=...)``.
 
 The per-series packing loop is Python over numpy-precomputed deltas/xors;
 it runs inside an Arrow-batched ``mapInPandas`` over key-partitioned,
@@ -25,12 +36,73 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+# top bit of a blob's leading 32-bit point count: set by the strided
+# layouts of both archive codecs, so a blob from before them fails loudly
+FORMAT_MARK = 1 << 31
+
+
+def marked_count(n: int) -> int:
+    """The leading 32-bit word of a blob holding ``n`` points."""
+    if n >= FORMAT_MARK:
+        raise ValueError(f"{n} points do not fit one blob (max {FORMAT_MARK - 1})")
+    return n | FORMAT_MARK
+
+
+def unmarked_count(word: int, codec: str) -> int:
+    """Inverse of :func:`marked_count`; an unmarked word is a blob from
+    before the strided layouts."""
+    if not word & FORMAT_MARK:
+        raise ValueError(
+            f"{codec} blob predates the strided archive layout; rebuild the "
+            "archive with refresh_pipeline(..., force_days=[...])"
+        )
+    return word & ~FORMAT_MARK
+
+
+def put_uvarint(buf: bytearray, u: int) -> None:
+    """Append an unsigned LEB128 varint (7 bits per byte, low first)."""
+    while u >= 0x80:
+        buf.append((u & 0x7F) | 0x80)
+        u >>= 7
+    buf.append(u)
+
+
+def get_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
+    u = shift = 0
+    while True:
+        b = buf[pos]
+        pos += 1
+        u |= (b & 0x7F) << shift
+        if b < 0x80:
+            return u, pos
+        shift += 7
+
+
+def put_svarint(buf: bytearray, v: int) -> None:
+    """Append a signed int64 as a zigzag varint."""
+    put_uvarint(buf, (v << 1) ^ (v >> 63))
+
+
+def get_svarint(buf: bytes, pos: int) -> tuple[int, int]:
+    u, pos = get_uvarint(buf, pos)
+    return (u >> 1) ^ -(u & 1), pos
+
+
+def divide_stream(deltas: np.ndarray) -> tuple[int, np.ndarray]:
+    """A signed int64 delta stream's divisor — the GCD of its entries, 1
+    when it is empty or all zero — and the stream divided by it.  The
+    division is exact, so ``quotients * divisor`` restores the stream."""
+    g = int(np.gcd.reduce(deltas)) if len(deltas) else 0
+    if g <= 1:  # 0: empty or all zero; < 0: gcd overflowed at int64 min
+        return 1, deltas
+    return g, deltas // np.int64(g)
+
 
 class _BitWriter:
     __slots__ = ("buf", "acc", "nbits")
 
-    def __init__(self) -> None:
-        self.buf = bytearray()
+    def __init__(self, prefix: bytes = b"") -> None:
+        self.buf = bytearray(prefix)
         self.acc = 0
         self.nbits = 0
 
@@ -82,22 +154,17 @@ def _encode_reference(timestamps: np.ndarray, values: np.ndarray) -> bytes:
     n = len(ts)
     if len(vs) != n:
         raise ValueError("timestamps/values length mismatch")
-    w = _BitWriter()
-    w.write(n, 32)
+    head, dods = _header(ts)
+    w = _BitWriter(head)
     if n == 0:
         return w.getvalue()
-    w.write(int(ts[0]) & ((1 << 64) - 1), 64)
     w.write(int(vs[0:1].view(np.uint64)[0]), 64)
     if n == 1:
         return w.getvalue()
 
-    deltas = np.diff(ts)
-    dods = np.diff(deltas)
     bits = vs.view(np.uint64)
     xors = bits[1:] ^ bits[:-1]
 
-    # first delta: 64-bit signed (arbitrary series start gaps)
-    w.write(int(deltas[0]) & ((1 << 64) - 1), 64)
     # first value after v0 uses the "new window" branch by construction
     prev_lead, prev_len = -1, 0
 
@@ -140,6 +207,24 @@ def _encode_reference(timestamps: np.ndarray, values: np.ndarray) -> bytes:
     return w.getvalue()
 
 
+def _header(ts: np.ndarray) -> tuple[bytearray, np.ndarray]:
+    """The byte-aligned blob header — ``[n|mark:32]`` big-endian, then t0,
+    the first delta and the dod divisor as varints, each only when the
+    series has one — and the divided delta-of-deltas the bit stream codes.
+    Shared by :func:`encode` and :func:`_encode_reference`."""
+    n = len(ts)
+    head = bytearray(marked_count(n).to_bytes(4, "big"))
+    deltas = np.diff(ts)
+    divisor, dods = divide_stream(np.diff(deltas))
+    if n > 0:
+        put_svarint(head, int(ts[0]))
+    if n > 1:
+        put_svarint(head, int(deltas[0]))
+    if n > 2:
+        put_uvarint(head, divisor)
+    return head, dods
+
+
 _MASK64 = (1 << 64) - 1
 _VECTORIZE_MIN = 128
 
@@ -147,7 +232,10 @@ _VECTORIZE_MIN = 128
 def encode(timestamps: np.ndarray, values: np.ndarray) -> bytes:
     """Encode parallel (int64 epoch-seconds, float64) arrays → blob.
 
-    Layout: [n:32][t0:64][v0:64][interleaved ts/value bit-stream...]
+    Layout: ``[n|mark:32]`` then varints ``t0``, ``d0`` (first delta) and
+    the dod divisor (each present only when n > 0, 1, 2), then the bit
+    stream ``[v0:64]`` followed by, per later point, its divided dod
+    bucket (from the third point) and its XOR value branch.
 
     Fully vectorized except one Python iteration per VALUE-WINDOW CHANGE:
     dod bucket classification, XOR lead/trail geometry, per-run emission and
@@ -169,20 +257,13 @@ def encode(timestamps: np.ndarray, values: np.ndarray) -> bytes:
         # numpy fixed costs lose below ~100 points; the scalar reference is
         # byte-identical and faster for short series (measured crossover)
         return _encode_reference(ts, vs)
-    head_vals = [n, int(ts[0]) & _MASK64, int(vs[0:1].view(np.uint64)[0])]
-    head_bits = [32, 64, 64]
-    if n == 1:
-        return _pack(np.array(head_vals, dtype=np.uint64),
-                     np.array(head_bits, dtype=np.uint64))
+    head, dods = _header(ts)
+    head_vals = [int(vs[0:1].view(np.uint64)[0])]
+    head_bits = [64]
 
-    deltas = np.diff(ts)
-    dods = np.diff(deltas)
     bits64 = vs.view(np.uint64)
     xors = (bits64[1:] ^ bits64[:-1]).astype(np.uint64)
     m = n - 1  # value entries; value index i pairs with ts entry for i >= 1
-
-    head_vals.append(int(deltas[0]) & _MASK64)
-    head_bits.append(64)
 
     # --- vectorized dod classification, aligned to value index i (i>=1);
     # the rare 68-bit branch splits into (prefix+hi32, 36) + (lo32, 32) ---
@@ -394,7 +475,7 @@ def encode(timestamps: np.ndarray, values: np.ndarray) -> bytes:
                     ap_b(vbits)
             i += 1
     flush_buf()
-    return _pack(np.concatenate(out_vals), np.concatenate(out_bits))
+    return bytes(head) + _pack(np.concatenate(out_vals), np.concatenate(out_bits))
 
 
 # per-byte leading/trailing-zero-count tables for the vectorized bit geometry
@@ -447,24 +528,26 @@ def _pack(vals: list[int], nbits: list[int]) -> bytes:
 
 
 def decode(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
-    """Inverse of :func:`encode`."""
-    r = _BitReader(blob)
-    n = r.read(32)
+    """Inverse of :func:`encode`; ``ValueError`` on a blob without the
+    layout mark."""
+    n = unmarked_count(int.from_bytes(blob[:4], "big"), "Gorilla")
     ts = np.empty(n, dtype=np.int64)
     vs_bits = np.empty(n, dtype=np.uint64)
     if n == 0:
         return ts, vs_bits.view(np.float64)
-    t0 = r.read(64)
-    if t0 >= 1 << 63:
-        t0 -= 1 << 64
+    t0, pos = get_svarint(blob, 4)
+    delta, divisor = 0, 1
+    if n > 1:
+        delta, pos = get_svarint(blob, pos)
+    if n > 2:
+        divisor, pos = get_uvarint(blob, pos)
+    r = _BitReader(blob)
+    r.pos = 8 * pos
     ts[0] = t0
     vs_bits[0] = r.read(64)
     if n == 1:
         return ts, vs_bits.view(np.float64)
 
-    delta = r.read(64)
-    if delta >= 1 << 63:
-        delta -= 1 << 64
     prev_lead, prev_len = -1, 0
     prev_bits = int(vs_bits[0])
     t = t0
@@ -480,7 +563,7 @@ def decode(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
                 dod = _sext(r.read(12), 12)
             else:
                 dod = _sext(r.read(64), 64)
-            delta += dod
+            delta += dod * divisor
         t += delta
         ts[i] = t
         if r.read(1) == 0:

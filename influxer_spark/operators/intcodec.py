@@ -9,10 +9,22 @@ packed with Simple8b (Anh & Moffat, "Index compression using 64-bit
 words", Softw. Pract. Exper. 2010), with an RLE fast path when all
 deltas are identical.  This module implements that design natively:
 
-- timestamps: t0 + first delta raw, then delta-of-deltas → zigzag →
-  packed (evenly spaced buckets — the normal tier shape — collapse to
-  one RLE word);
-- values: v0 raw, then deltas → zigzag → packed.
+- header: the point count as a little-endian uint32 whose top bit marks
+  this layout, then t0, the first delta and v0 as zigzag varints;
+- timestamps: delta-of-deltas → divided by their GCD → zigzag → packed
+  (evenly spaced buckets — the normal tier shape — collapse to one RLE
+  block; sparse bucket starts on the 60 s grid pack as multiples of 1);
+- values: deltas → divided by their GCD → zigzag → packed (sum-cents of
+  integer metrics are multiples of 100).
+
+Each block is a mode byte, then: RLE — the delta as a zigzag varint; S8B
+— the divisor and the word count as varints, then the words; raw — the
+int64 deltas.  A block's length is implied by the blob's n (n-2
+delta-of-deltas, n-1 value deltas); an empty block is not written.  The
+divisor and varint helpers are gorilla.py's, shared by every packed
+stream.  Blobs from before this layout fail to decode with
+``ValueError``; rebuild such an archive with
+``refresh_pipeline(..., force_days=...)``.
 
 Packing variant (documented, deliberately NOT byte-compatible with any
 particular implementation): 64-bit words, 4-bit selector in the top
@@ -36,7 +48,17 @@ import struct
 import numpy as np
 import pandas as pd
 
-from influxer_spark.operators.gorilla import carry_partition, epoch_seconds
+from influxer_spark.operators.gorilla import (
+    carry_partition,
+    divide_stream,
+    epoch_seconds,
+    get_svarint,
+    get_uvarint,
+    marked_count,
+    put_svarint,
+    put_uvarint,
+    unmarked_count,
+)
 
 # width → how many values one 60-bit payload holds; selector = index + 1
 _WIDTHS = [1, 2, 3, 4, 5, 6, 7, 8, 10, 12, 15, 20, 30, 60]
@@ -227,77 +249,93 @@ def unpack_simple8b_ref(words: list[int] | np.ndarray, n: int) -> np.ndarray:
 
 
 def _pack_block(deltas: np.ndarray) -> bytes:
-    """mode byte + payload for one signed-delta array (may be empty)."""
-    n = len(deltas)
-    if n == 0:
-        return struct.pack("<BI", _MODE_RLE, 0) + struct.pack("<q", 0)
+    """mode byte + payload for one non-empty signed-delta array (its
+    length is implied by the blob's point count)."""
+    out = bytearray()
     if np.all(deltas == deltas[0]):
-        return struct.pack("<BI", _MODE_RLE, n) + struct.pack(
-            "<q", int(deltas[0])
-        )
-    z = zigzag(deltas)
+        out.append(_MODE_RLE)
+        put_svarint(out, int(deltas[0]))
+        return bytes(out)
+    divisor, quotients = divide_stream(deltas)
+    z = zigzag(quotients)
     if int(z.max()) >= (1 << 60):
-        return struct.pack("<BI", _MODE_RAW, n) + deltas.astype("<i8").tobytes()
+        out.append(_MODE_RAW)
+        return bytes(out) + deltas.astype("<i8").tobytes()
     words = pack_simple8b(z)
-    return (
-        struct.pack("<BI", _MODE_S8B, n)
-        + struct.pack("<I", len(words))
-        + np.array(words, dtype=np.uint64).astype("<u8").tobytes()
-    )
+    out.append(_MODE_S8B)
+    put_uvarint(out, divisor)
+    put_uvarint(out, len(words))
+    return bytes(out) + np.array(words, dtype=np.uint64).astype("<u8").tobytes()
 
 
-def _unpack_block(buf: bytes, pos: int) -> tuple[np.ndarray, int]:
-    mode, n = struct.unpack_from("<BI", buf, pos)
-    pos += 5
+def _unpack_block(buf: bytes, pos: int, n: int) -> tuple[np.ndarray, int]:
+    mode = buf[pos]
+    pos += 1
     if mode == _MODE_RLE:
-        (d,) = struct.unpack_from("<q", buf, pos)
-        return np.full(n, d, dtype=np.int64), pos + 8
+        d, pos = get_svarint(buf, pos)
+        return np.full(n, d, dtype=np.int64), pos
     if mode == _MODE_RAW:
         out = np.frombuffer(buf, dtype="<i8", count=n, offset=pos).astype(
             np.int64
         )
         return out, pos + 8 * n
-    (nw,) = struct.unpack_from("<I", buf, pos)
-    pos += 4
+    if mode != _MODE_S8B:
+        raise ValueError(f"unknown simple8b block mode {mode}")
+    divisor, pos = get_uvarint(buf, pos)
+    nw, pos = get_uvarint(buf, pos)
     words = np.frombuffer(buf, dtype="<u8", count=nw, offset=pos)
-    return unzigzag(unpack_simple8b(words, n)), pos + 8 * nw
+    quotients = unzigzag(unpack_simple8b(words, n))
+    return quotients * np.int64(divisor), pos + 8 * nw
 
 
 def encode_int(timestamps: np.ndarray, values: np.ndarray) -> bytes:
-    """One series → one blob: (n, t0, d0, v0) header, then a ts
-    delta-of-delta block and a value delta block."""
+    """One series → one blob: ``[n|mark:<I]``, then varints t0, d0 (first
+    delta; n > 1) and v0, then the ts delta-of-delta block (n > 2) and the
+    value delta block (n > 1)."""
     t = np.asarray(timestamps, dtype=np.int64)
     v = np.asarray(values, dtype=np.int64)
     if len(t) != len(v):
         raise ValueError("timestamps and values must have equal length")
     n = len(t)
+    head = bytearray(struct.pack("<I", marked_count(n)))
     if n == 0:
-        return struct.pack("<I", 0)
-    t0, v0 = int(t[0]), int(v[0])
-    d0 = int(t[1] - t[0]) if n > 1 else 0
-    head = struct.pack("<Iqqq", n, t0, d0, v0)
+        return bytes(head)
     dt = np.diff(t)
-    dod = np.diff(dt) if n > 2 else np.empty(0, dtype=np.int64)
-    dv = np.diff(v)
-    return head + _pack_block(dod) + _pack_block(dv)
+    put_svarint(head, int(t[0]))
+    if n > 1:
+        put_svarint(head, int(dt[0]))
+    put_svarint(head, int(v[0]))
+    blocks = [bytes(head)]
+    if n > 2:
+        blocks.append(_pack_block(np.diff(dt)))
+    if n > 1:
+        blocks.append(_pack_block(np.diff(v)))
+    return b"".join(blocks)
 
 
 def decode_int(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
-    (n,) = struct.unpack_from("<I", blob, 0)
-    if n == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    _, t0, d0, v0 = struct.unpack_from("<Iqqq", blob, 0)
-    pos = struct.calcsize("<Iqqq")
-    dod, pos = _unpack_block(blob, pos)
-    dv, pos = _unpack_block(blob, pos)
+    """Inverse of :func:`encode_int`; ``ValueError`` on a blob without the
+    layout mark."""
+    (word,) = struct.unpack_from("<I", blob, 0)
+    n = unmarked_count(word, "simple8b")
     t = np.empty(n, dtype=np.int64)
-    t[0] = t0
-    if n > 1:
-        dt = np.concatenate(([d0], d0 + np.cumsum(dod))) if n > 2 else np.array([d0])
-        t[1:] = t0 + np.cumsum(dt)
     v = np.empty(n, dtype=np.int64)
+    if n == 0:
+        return t, v
+    t0, pos = get_svarint(blob, 4)
+    d0 = 0
+    if n > 1:
+        d0, pos = get_svarint(blob, pos)
+    v0, pos = get_svarint(blob, pos)
+    dod = np.empty(0, dtype=np.int64)
+    if n > 2:
+        dod, pos = _unpack_block(blob, pos, n - 2)
+    t[0] = t0
     v[0] = v0
     if n > 1:
+        dv, pos = _unpack_block(blob, pos, n - 1)
+        dt = np.concatenate(([d0], d0 + np.cumsum(dod))).astype(np.int64)
+        t[1:] = t0 + np.cumsum(dt)
         v[1:] = v0 + np.cumsum(dv)
     return t, v
 

@@ -201,3 +201,75 @@ def test_dod_bucket_boundaries_roundtrip():
         vs = np.array([1.0, 2.0, 3.0, 4.0])
         dts, _ = decode(encode(ts, vs))
         assert np.array_equal(dts, ts), dod
+
+
+# --- strided layout: dods divided by their GCD, varint header -------------
+
+# 28 bucket starts of one day on the 1m grid, gaps irregular: the shape of
+# an archive series-day
+_MINUTES = [37, 113, 140, 237, 253, 405, 427, 504, 517, 526, 662, 869, 906,
+            914, 933, 1003, 1029, 1044, 1083, 1125, 1182, 1203, 1226, 1290,
+            1320, 1386, 1427, 1437]
+
+
+def _strides():
+    return st.one_of(
+        st.sampled_from([1, 60, 3600, 86400]),
+        st.integers(min_value=1, max_value=10**6),
+    )
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    _strides(),
+    st.integers(min_value=0, max_value=2**40),
+    st.lists(st.integers(min_value=-50, max_value=1440), max_size=200),
+    st.sampled_from(["random", "hundreds", "constant"]),
+)
+def test_strided_roundtrip_property(stride, t0, gaps, style):
+    """Gaps that are random multiples of a stride (negative ones too);
+    both encoders agree byte for byte."""
+    from influxer_spark.operators.gorilla import _encode_reference
+
+    ts = t0 + stride * np.concatenate(([0], np.cumsum(gaps))).astype(np.int64)
+    n = len(ts)
+    rng = np.random.default_rng(stride + n)
+    if style == "random":
+        vs = rng.normal(0, 1e6, n)
+    elif style == "hundreds":
+        vs = 100.0 * rng.integers(-50, 50, n)
+    else:
+        vs = np.full(n, 7.25)
+    blob = _roundtrip(ts, vs)
+    assert blob == _encode_reference(ts, vs)
+
+
+def test_vectorized_matches_reference_on_strided_series():
+    from influxer_spark.operators.gorilla import _encode_reference
+
+    rng = np.random.default_rng(5)
+    for stride in (1, 60, 3600, 86400, 7919):
+        ts = 1_700_000_000 + stride * np.cumsum(rng.integers(1, 30, 400))
+        vs = np.round(rng.normal(50, 3, 400), 1)
+        assert encode(ts, vs) == _encode_reference(ts, vs), stride
+        _roundtrip(ts, vs)
+
+
+def test_unmarked_old_layout_blob_is_rejected():
+    """Blobs from before the strided layout (no mark bit in the leading
+    count) fail loudly and name the rebuild."""
+    old_empty = bytes(4)
+    old_single = (1).to_bytes(4, "big") + (1_700_000_000).to_bytes(8, "big") \
+        + np.array([2.5]).view(np.uint64)[0].item().to_bytes(8, "big")
+    for blob in (old_empty, old_single):
+        with pytest.raises(ValueError, match="rebuild the archive"):
+            decode(blob)
+
+
+def test_sparse_minute_series_is_under_60_percent_of_the_old_layout():
+    """An archive-shaped series-day: the layout with 64-bit header words and
+    undivided dods encoded it to 225 bytes."""
+    ts = 1_704_067_200 + 60 * np.array(_MINUTES, dtype=np.int64)
+    vs = np.array([float((i * 7) % 4) for i in range(len(ts))])
+    blob = _roundtrip(ts, vs)
+    assert len(blob) < 0.6 * 225, len(blob)

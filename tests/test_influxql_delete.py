@@ -200,7 +200,92 @@ def test_time_delete_drops_archive_partitions_too(spark, tmp_path):
         {"pages": points.filter(F.col("warc_ts") >= d1)}, ts_col="warc_ts"
     )
     assert raw.execute(q).count() == 0
-    # nothing committed is left in range: the tier path reports that
-    # instead of serving the deleted day from the archive
-    with pytest.raises(InfluxQLError, match="no committed"):
-        eng.execute(q).collect()
+    # nothing committed is left in range: the statement routes raw instead
+    # of serving the deleted day from the archive
+    assert eng.execute(f"EXPLAIN {q}").collect()[0]["plan"] == (
+        "route: raw — no committed rollup_1h partitions in range")
+    assert eng.execute(q).count() == 0
+
+
+def test_day_delete_routes_the_emptied_range_raw(spark, tmp_path):
+    """After a day-aligned DELETE no tier partition meets the deleted day,
+    so a statement over it routes raw (the raw frame is registered) and
+    answers as the raw engine does, instead of failing on the gap."""
+    ev, cat, eng = _build(spark, tmp_path)
+    eng.execute_statement("DELETE FROM m WHERE time < '2024-01-02'")
+    q = ("SELECT count(value) AS c FROM m WHERE time >= '2024-01-01' "
+         "AND time < '2024-01-02' GROUP BY time(6h) fill(0)")
+    assert eng.execute(f"EXPLAIN {q}").collect()[0]["plan"] == (
+        "route: raw — no committed rollup_1h partitions in range")
+    raw = InfluxQLEngine(
+        {"m": ev.filter("ts >= '2024-01-02'")}, ts_col="ts"
+    ).execute(q)
+    got = sorted(tuple(r) for r in eng.execute(q).collect())
+    assert got == sorted(tuple(r) for r in raw.collect())
+    # the surviving days still serve from the tiers
+    assert eng.execute(
+        "EXPLAIN SELECT count(value) FROM m WHERE time >= '2024-01-02' "
+        "AND time < '2024-01-03' GROUP BY time(6h)"
+    ).collect()[0]["plan"].startswith("route: rollup — rollup_1h")
+
+
+def test_tag_delete_rewrites_the_archives(spark, tmp_path):
+    """A tag-predicate DELETE reaches the archives through series_keys:
+    no archive row keeps the deleted series, so once retention expires the
+    rollups the archive fallback does not serve it again."""
+    from influxer_spark.datagen import generate_pages
+    from influxer_spark.extract import (
+        pages_to_points, with_crawl_metrics, with_extracted,
+    )
+    from influxer_spark.pipeline import run_pipeline
+
+    pages = generate_pages(str(tmp_path / "pg"), n_rows=1500, seed=42, days=2)
+    root = str(tmp_path / "cat")
+    run_pipeline(spark, pages, root)
+    cat = TableCatalog(root)
+    points = pages_to_points(
+        with_crawl_metrics(with_extracted(spark.read.parquet(pages)))
+    )
+
+    def archived_metrics(table):
+        return {
+            r[0] for r in cat.read_committed(spark, table)
+            .select(F.element_at("series_keys", 3)).distinct().collect()
+        }
+
+    victim = sorted(archived_metrics("rollup_1m_counts"))[0]
+    tables = ("rollup_1m", "rollup_1h", "rollup_1d",
+              "rollup_1m_gorilla", "rollup_1m_counts")
+    before = {t: cat.current_snapshot(t) for t in tables}
+    # rejected before any commit: a tag outside the keys, and key columns
+    # that do not map onto the archives' series_keys
+    eng = InfluxQLEngine({"pages": points}, ts_col="warc_ts")
+    eng.register_tiered("pages", cat, key_cols=("url", "metric"))
+    with pytest.raises(InfluxQLError, match="tag predicates on"):
+        eng.execute_statement("DELETE FROM pages WHERE lang = 'en'")
+    short = InfluxQLEngine({"pages": points}, ts_col="warc_ts")
+    short.register_tiered("pages", cat, key_cols=("metric",))
+    with pytest.raises(InfluxQLError, match="keys series by 2 tag"):
+        short.execute_statement(f"DELETE FROM pages WHERE metric = '{victim}'")
+    assert {t: cat.current_snapshot(t) for t in tables} == before
+
+    eng = InfluxQLEngine({"pages": points}, ts_col="warc_ts")
+    eng.register_tiered("pages", cat, key_cols=("url", "metric"))
+    res = {r["tier_table"]: r["rows_deleted"] for r in eng.execute_statement(
+        f"DELETE FROM pages WHERE metric = '{victim}'"
+    ).collect()}
+    assert res["rollup_1m_gorilla"] > 0 and res["rollup_1m_counts"] > 0
+    for table in ("rollup_1m_gorilla", "rollup_1m_counts"):
+        kept = archived_metrics(table)
+        assert kept and victim not in kept, table
+
+    # retention expires the rollups; the archive answers count/sum/mean
+    for table in ("rollup_1m", "rollup_1h", "rollup_1d"):
+        for day in sorted(cat.committed_partitions(table)):
+            cat.drop_partition(table, day, reason="retention")
+    cold = InfluxQLEngine({}, ts_col="warc_ts")  # tier-only measurement
+    cold.register_tiered("pages", cat, key_cols=("url", "metric"))
+    rows = cold.execute(
+        "SELECT count(value) AS c FROM pages GROUP BY time(1h), metric"
+    ).collect()
+    assert rows and victim not in {r["metric"] for r in rows}

@@ -170,3 +170,89 @@ def test_dual_encode_matches_single_codecs(spark, sf_dir):
         assert d["int_bytes"] == ints[k]["encoded_bytes"]
         assert d["n_points"] == gor[k]["n_points"] == ints[k]["n_points"]
         assert d["raw_bytes"] == gor[k]["raw_bytes"]
+
+
+# --- strided layout: deltas divided by their GCD, varint headers ----------
+
+_I64 = np.iinfo(np.int64)
+# 28 bucket starts of one day on the 1m grid, gaps irregular: the shape of
+# an archive series-day
+_MINUTES = [37, 113, 140, 237, 253, 405, 427, 504, 517, 526, 662, 869, 906,
+            914, 933, 1003, 1029, 1044, 1083, 1125, 1182, 1203, 1226, 1290,
+            1320, 1386, 1427, 1437]
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    st.one_of(
+        st.sampled_from([1, 60, 3600, 86400]),
+        st.integers(min_value=1, max_value=10**6),
+    ),
+    st.integers(0, 2**40),
+    st.lists(st.tuples(st.integers(-50, 1440), st.integers(-(2**20), 2**20)),
+             max_size=200),
+    st.sampled_from([1, 100, 7]),
+)
+def test_strided_roundtrip_property(stride, t0, steps, v_unit):
+    """Timestamps whose gaps are random multiples of a stride (negative
+    ones too) and values on a unit grid (sum-cents are multiples of 100)."""
+    gaps = [g for g, _ in steps]
+    t = t0 + stride * np.concatenate(([0], np.cumsum(gaps))).astype(np.int64)
+    v = v_unit * np.concatenate(([0], np.cumsum([d for _, d in steps])))
+    _roundtrip(t, v)
+
+
+def test_int64_edges_take_the_raw_mode():
+    edges = np.array([_I64.min, _I64.max, 0, -1, _I64.min + 1, 2**62],
+                     dtype=np.int64)
+    _roundtrip(edges, edges)
+    _roundtrip(np.arange(len(edges)) * 60, edges[::-1])
+    blob = IC.encode_int(np.arange(len(edges)) * 60, edges)
+    # t0, d0, v0 varints, the RLE ts block, then a raw value block: its
+    # mode byte and the wrapped int64 deltas
+    raw = np.diff(edges).astype("<i8").tobytes()
+    assert blob.endswith(bytes([IC._MODE_RAW]) + raw)
+
+
+def test_constant_series_take_rle_blocks():
+    t = 1_700_000_000 + 3600 * np.arange(500, dtype=np.int64)
+    v = np.full(500, -12, dtype=np.int64)
+    blob = IC.encode_int(t, v)
+    _roundtrip(t, v)
+    # [n:4] + 3 varints + two (mode byte + one varint) blocks
+    assert len(blob) <= 4 + 3 * 10 + 2 * 2, len(blob)
+
+
+def test_hundreds_divide_out_of_the_value_block():
+    t = 60 * np.arange(1000, dtype=np.int64)
+    rng = np.random.default_rng(8)
+    steps = rng.integers(-7, 8, 1000)
+    unit = IC.encode_int(t, steps.cumsum())
+    cents = IC.encode_int(t, 100 * steps.cumsum())
+    _roundtrip(t, 100 * steps.cumsum())
+    # the ×100 costs the divisor varint and v0's wider varint, nothing more
+    assert len(cents) <= len(unit) + 3
+
+
+def test_unmarked_old_layout_blob_is_rejected():
+    """Blobs from before the strided layout (no mark bit in the leading
+    count) fail loudly and name the rebuild."""
+    import struct
+
+    old_empty = struct.pack("<I", 0)
+    old_pair = struct.pack("<Iqqq", 2, 0, 60, 5) + bytes(26)
+    for blob in (old_empty, old_pair):
+        with pytest.raises(ValueError, match="rebuild the archive"):
+            IC.decode_int(blob)
+
+
+def test_sparse_minute_series_is_under_60_percent_of_the_old_layout():
+    """An archive-shaped series-day: the layout with a fixed <Iqqq header,
+    fixed block headers and undivided deltas encoded its counts to 118
+    bytes and its sum-cents to 150."""
+    t = 1_704_067_200 + 60 * np.array(_MINUTES, dtype=np.int64)
+    cnt = np.array([1 + (i * 5) % 3 for i in range(len(t))], dtype=np.int64)
+    cents = 100 * cnt * np.array([(i * 3) % 5 for i in range(len(t))])
+    for v, old in ((cnt, 118), (cents, 150)):
+        _roundtrip(t, v)
+        assert len(IC.encode_int(t, v)) < 0.6 * old, (len(IC.encode_int(t, v)), old)
