@@ -536,7 +536,12 @@ class TableCatalog:
         self, name: str, partition_values: list[str], as_of: int | None = None
     ) -> list[str]:
         """Resolve committed partition values to their live data dirs."""
-        parts = self.committed_partitions(name, as_of)
+        return self._dirs(name, self.read_manifest(name, as_of), partition_values)
+
+    def _dirs(
+        self, name: str, manifest: dict[str, Any], partition_values: list[str]
+    ) -> list[str]:
+        parts = manifest["partitions"]
         return [
             self._partition_dir(name, v, parts[v])
             for v in partition_values
@@ -553,16 +558,42 @@ class TableCatalog:
             return None
         return [f["name"] for f in schema.get("fields", [])]
 
+    @staticmethod
+    def _read_paths(
+        spark: SparkSession, manifest: dict[str, Any], paths: list[str]
+    ) -> DataFrame:
+        """Scan data dirs of one snapshot, PROJECTING its recorded schema
+        (Iceberg schema evolution: a partition written before a column
+        existed returns NULL for it) — no footer-sampling job infers types,
+        which costs tens of ms per tier statement.  A snapshot that records
+        no schema infers it."""
+        reader = spark.read
+        schema = manifest.get("schema")
+        if schema is not None:
+            from pyspark.sql.types import StructType
+
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(*paths)
+
+    def read_partitions(
+        self, spark: SparkSession, name: str, partition_values: list[str],
+        as_of: int | None = None,
+    ) -> DataFrame | None:
+        """The committed partitions among ``partition_values`` — the one
+        partition-read path every tier, archive and index read goes
+        through.  None when none of them is committed."""
+        manifest = self.read_manifest(name, as_of)
+        paths = self._dirs(name, manifest, partition_values)
+        return self._read_paths(spark, manifest, paths) if paths else None
+
     def read_partition(
         self, spark: SparkSession, name: str, partition_value: str,
         as_of: int | None = None,
     ) -> DataFrame:
-        parts = self.committed_partitions(name, as_of)
-        if partition_value not in parts:
+        df = self.read_partitions(spark, name, [partition_value], as_of)
+        if df is None:
             raise ValueError(f"table {name} has no committed partition {partition_value}")
-        return spark.read.parquet(
-            self._partition_dir(name, partition_value, parts[partition_value])
-        )
+        return df
 
     def read_partitions_with_key(
         self, spark: SparkSession, name: str, partition_values: list[str],
@@ -577,26 +608,14 @@ class TableCatalog:
         read back as the uuid string).  Path extraction keeps one scan
         over one file index with no discovery at all.
 
-        Projects the snapshot's recorded schema when present, so rewrite
-        paths (delete/merge) can never lose a column that a given
+        Projects the snapshot's recorded schema (:meth:`_read_paths`), so
+        rewrite paths (delete/merge) can never lose a column that a given
         partition predates — it reads as NULL and rewrites as NULL."""
         from pyspark.sql import functions as F
 
         manifest = self.read_manifest(name, as_of)
-        parts = manifest["partitions"]
-        paths = [
-            self._partition_dir(name, v, parts[v])
-            for v in partition_values
-            if v in parts
-        ]
-        reader = spark.read
-        schema = manifest.get("schema")
-        if schema is not None:
-            from pyspark.sql.types import StructType
-
-            reader = reader.schema(StructType.fromJson(schema))
-        df = reader.parquet(*paths)
-        return df.withColumn(
+        paths = self._dirs(name, manifest, partition_values)
+        return self._read_paths(spark, manifest, paths).withColumn(
             "p", F.regexp_extract(F.input_file_name(), "/p=([^/]+)/", 1)
         )
 
@@ -605,26 +624,14 @@ class TableCatalog:
     ) -> DataFrame:
         """Read ONLY snapshot-committed partitions (staging/uncommitted and
         orphaned data versions are invisible — Iceberg snapshot isolation).
-        ``as_of`` reads a historical snapshot (VERSION AS OF).
-
-        When the snapshot carries a recorded schema (every wave write
-        records one), the read PROJECTS it — Iceberg schema evolution:
-        partitions written before a column existed return NULL for it, and
-        no file footers are sampled to infer types.  Time travel reads the
-        schema AS OF that snapshot, so history keeps its own shape."""
+        ``as_of`` reads a historical snapshot (VERSION AS OF), projecting
+        the schema AS OF that snapshot, so history keeps its own shape."""
         manifest = self.read_manifest(name, as_of)
-        parts = manifest["partitions"]
-        paths = [self._partition_dir(name, v, e) for v, e in sorted(parts.items())]
+        paths = self._dirs(name, manifest, sorted(manifest["partitions"]))
         paths = [p for p in paths if os.path.exists(p)]
         if not paths:
             raise ValueError(f"table {name} has no committed partitions")
-        schema = manifest.get("schema")
-        reader = spark.read
-        if schema is not None:
-            from pyspark.sql.types import StructType
-
-            reader = reader.schema(StructType.fromJson(schema))
-        return reader.parquet(*paths)
+        return self._read_paths(spark, manifest, paths)
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return self.read_committed(spark, name)
@@ -777,12 +784,7 @@ class TableCatalog:
                     "schema to shape the empty result"
                 )
             return spark.createDataFrame([], StructType.fromJson(schema))
-        reader = spark.read
-        if schema is not None:
-            from pyspark.sql.types import StructType
-
-            reader = reader.schema(StructType.fromJson(schema))
-        df = reader.parquet(*paths)
+        df = self._read_paths(spark, manifest, paths)
         cond = F.lit(True)
         if lo is not None:
             cond = cond & (F.col(col) >= F.lit(lo))

@@ -68,8 +68,9 @@ Deliberate deviations (documented, tested):
 
 Scale notes: every query compiles to (a) one groupBy on (bucket, tags) —
 partial-aggregated map-side, shuffled once; (b) transforms as windows over
-that SAME (tags) partitioning — Catalyst reuses the exchange; (c) fill as a
-per-series spine join keyed identically.  Percentile/median/mode/integral
+that SAME (tags) partitioning — Catalyst reuses the exchange; (c) fill as
+one per-series aggregate whose spine the fill windows read on its own
+partitioning (operators/gapfill.py).  Percentile/median/mode/integral
 aggregate via sort_array(collect_list(…)) + expression folds: per-GROUP
 state, bounded by points-per-bucket (not table size), all codegen — the
 exact trade InfluxDB itself makes (those functions buffer the window).
@@ -78,6 +79,7 @@ exact trade InfluxDB itself makes (those functions buffer the window).
 from __future__ import annotations
 
 import re
+import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -1028,8 +1030,8 @@ class InfluxQLEngine:
             # InfluxQL EXPLAIN [ANALYZE] <select> — rendered honestly as
             # the tier route(s) the statement planned, then the Spark
             # physical plan (this engine's actual execution), one row per
-            # plan line; ANALYZE runs the query first and appends the row
-            # count
+            # plan line; ANALYZE runs the query first, puts its wall time
+            # right after the route row and appends the row count
             rest = sql.lstrip()[7:].lstrip()
             analyze = rest[:7].upper() == "ANALYZE"
             if analyze:
@@ -1037,10 +1039,13 @@ class InfluxQLEngine:
             df = self.execute(rest)
             plan = df._jdf.queryExecution().executedPlan().toString()
             lines = plan.splitlines()
+            if analyze:
+                t0 = time.perf_counter()
+                n = df.count()
+                lines.insert(0, f"exec_ms: {(time.perf_counter() - t0) * 1e3:.0f}")
+                lines.append(f"rows: {n}")
             if self._routes:
                 lines.insert(0, f"route: {'; '.join(map(str, self._routes))}")
-            if analyze:
-                lines.append(f"rows: {df.count()}")
             return self._spark().createDataFrame(
                 [(ln,) for ln in lines], ["plan"]
             )
@@ -2271,9 +2276,7 @@ class InfluxQLEngine:
         )
         if not parts:
             return None
-        df = self._spark().read.parquet(
-            *cat.partition_paths(route.table, parts, as_of=aso)
-        )
+        df = cat.read_partitions(self._spark(), route.table, parts, as_of=aso)
         if stmt.where is not None:
             df = df.filter(self._bucket_cond(stmt.where))
         return df
@@ -3224,8 +3227,8 @@ class InfluxQLEngine:
                     continue
                 if table in archives:
                     parts = sorted(cat.committed_partitions(table))[:1]
-                    row = parts and spark.read.parquet(
-                        *cat.partition_paths(table, parts)
+                    row = parts and cat.read_partitions(
+                        spark, table, parts
                     ).select(F.size("series_keys")).head()
                     if row and row[0] != len(key_cols) + 1:
                         raise InfluxQLError(

@@ -3,30 +3,35 @@
 
 Reference analogue: blank cells are skipped creating series gaps
 (Influxer/GenericFile.cs:81); InfluxDB's ``fill(linear)`` is what the reference
-delegates to.  Implemented natively:
+delegates to.  Implemented natively; :func:`fill_buckets` serves every
+InfluxQL ``fill()`` mode, LOCF and the deadman alert:
 
-1. per-series spine: ``sequence(min_bucket, max_bucket, interval)`` + explode —
-   NO global calendar cross-join, so the spine shuffle is keyed exactly like
-   the rollup shuffle (series key) and the join is 1:1 per series.
-2. left join observed buckets onto the spine.
-3. linear interpolation via two analytic windows:
+1. ONE per-series aggregate collects each series' observed ``(bucket,
+   values)`` entries beside its spine ``sequence(lo, hi, interval)`` — NO
+   global calendar cross-join, and no join at all: a NULL series key is
+   just another group (InfluxDB's missing tag is its own series).
+2. the observed entries explode together with the spine buckets none of
+   them holds (``array_except``: a hash-set difference, linear in the spine).
+3. linear interpolation / LOCF as analytic windows on the partitioning the
+   aggregate produced, so Spark adds no exchange:
    prev = last(value, ignorenulls) over rows UNBOUNDED PRECEDING..CURRENT,
    next = first(value, ignorenulls) over rows CURRENT..UNBOUNDED FOLLOWING,
    filled = prev + (next-prev) * (t-t_prev)/(t_next-t_prev).
-   Spine endpoints are the series' own min/max observed buckets, so
+   Spine endpoints default to the series' own min/max observed buckets, so
    interpolation is always bounded (no extrapolation).
 
-Scale notes: spine size is bounded by time-range/interval per series, not by
-raw row count.  The two windows are computed in ONE pass each direction over a
-partitioning already keyed by series — Catalyst reuses the exchange between
-the join and the windows.  All expressions are codegen'd; no UDFs.
+:func:`gapfill_interpolate` keeps the older shape: observed buckets LEFT
+JOINed onto a per-series spine.
+
+Scale notes: memory per series is bounded by its spine length (time range /
+interval), not by raw row count.  All expressions are codegen'd; no UDFs.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _INTERVAL = {"1m": "interval 1 minute", "1h": "interval 1 hour", "1d": "interval 1 day"}
@@ -139,36 +144,33 @@ def fill_buckets(
     range (InfluxDB fills the queried range); default is each series' own
     observed min/max (no extrapolation).
 
-    Same scale shape as gapfill_interpolate: per-series spine (no calendar
-    cross-join), 1:1 join keyed like the rollup shuffle, and ONE shared
-    backward + forward window pair for every value column.
+    Input contract: ``rolled`` is an aggregate — at most ONE row per
+    (series, bucket).  One ``groupBy(key_cols)`` builds every series'
+    spine; the ONE shared backward + forward window pair (for every value
+    column) runs on its partitioning, with no further exchange.
     """
     if mode not in ("null", "previous", "linear", "value"):
         raise ValueError(f"unknown fill mode {mode!r}")
     keys = [F.col(k) for k in key_cols]
-    interval = F.expr(f"interval {int(width_seconds)} seconds")
-
-    if spine_bounds is not None:
-        lo, hi = spine_bounds
-        bounds = rolled.groupBy(*keys).agg(
-            F.lit(lo).cast("timestamp").alias("_lo"),
-            F.lit(hi).cast("timestamp").alias("_hi"),
-        )
+    width = int(width_seconds)
+    if spine_bounds is None:
+        lo, hi = F.min(bucket_col), F.max(bucket_col)
     else:
-        bounds = rolled.groupBy(*keys).agg(
-            F.min(bucket_col).alias("_lo"), F.max(bucket_col).alias("_hi")
-        )
-    spine = bounds.select(
-        *key_cols,
-        F.explode(F.sequence(F.col("_lo"), F.col("_hi"), interval)).alias(bucket_col),
+        lo, hi = (F.lit(b).cast("timestamp") for b in spine_bounds)
+
+    # an observed bucket's entry carries (_hit, *values), so an all-NULL
+    # aggregate is not misread as a gap; a gap's entry is NULL
+    observed = F.struct(
+        F.col(bucket_col).alias("b"),
+        F.struct(F.lit(True).alias("_hit"), *value_cols).alias("r"),
     )
-    observed = rolled.select(
-        *key_cols, bucket_col, *[F.col(c).alias(f"_obs_{c}") for c in value_cols]
+    series = rolled.groupBy(*keys).agg(
+        F.collect_list(observed).alias("_obs"), lo.alias("_lo"), hi.alias("_hi")
     )
-    # a spine row is "filled" iff no observed bucket matched; use a marker
-    # column so all-NULL observed aggregates aren't misread as gaps
-    marked = observed.withColumn("_hit", F.lit(True))
-    joined = spine.join(marked, on=[*key_cols, bucket_col], how="left")
+    # the array steps are SQL text: one JVM call each, where the Column API
+    # makes a round trip per node and lambda
+    gaps = (f"array_except(sequence(_lo, _hi, interval {width} seconds), "
+            "transform(_obs, e -> e.b))")
     if spine_tz:
         # tz() buckets are WALL-CLOCK labels: a uniform wall-second spine
         # would manufacture the spring-forward hour (e.g. 02:00 on a US
@@ -183,38 +185,29 @@ def fill_buckets(
         # bucket contract cannot depend on whether data happens to be
         # present).  Since a zone's gap is one contiguous interval, the
         # whole bucket is inside it iff BOTH endpoints L and L+w-1 fail
-        # the round trip; observed (_hit) labels are kept regardless.
-        def _rt_ok(c):
-            return (
-                F.from_utc_timestamp(F.to_utc_timestamp(c, spine_tz), spine_tz)
-                == c
-            )
+        # the round trip; observed labels are kept regardless.
+        tz = spine_tz.replace("\\", "\\\\").replace("'", "\\'")
 
-        last = F.timestamp_seconds(
-            F.unix_timestamp(F.col(bucket_col)) + int(width_seconds) - 1
-        )
-        joined = joined.filter(
-            F.col("_hit").isNotNull()
-            | _rt_ok(F.col(bucket_col))
-            | _rt_ok(last)
-        )
-    filled_flag = F.col("_hit").isNull()
+        def rt_ok(x: str) -> str:
+            return f"from_utc_timestamp(to_utc_timestamp({x}, '{tz}'), '{tz}') = {x}"
 
-    w_back = (
-        Window.partitionBy(*keys)
-        .orderBy(bucket_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_fwd = (
-        Window.partitionBy(*keys)
-        .orderBy(bucket_col)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    t = F.unix_timestamp(F.col(bucket_col)).cast("double")
+        last = f"timestamp_seconds(unix_timestamp(b) + {width - 1})"
+        gaps = f"filter({gaps}, b -> {rt_ok('b')} OR {rt_ok(last)})"
+    # observed buckets outside a pinned range are not on the spine
+    rows = series.select(*keys, F.expr(
+        f"explode(concat(transform({gaps}, b -> named_struct('b', b, 'r', NULL)), "
+        "filter(_obs, e -> e.b BETWEEN _lo AND _hi))) AS _e"
+    ))
 
-    out = joined
-    for c in value_cols:
-        obs = F.col(f"_obs_{c}")
+    bucket, entry = F.col("_e")["b"], F.col("_e")["r"]
+    filled_flag = entry["_hit"].isNull()
+    w = Window.partitionBy(*keys).orderBy(bucket)
+    w_back = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w_fwd = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    t = F.unix_timestamp(bucket).cast("double")
+
+    def fill(c: str) -> Column:
+        obs = entry[c]
         if mode == "null":
             v = obs
         elif mode == "value":
@@ -229,7 +222,10 @@ def fill_buckets(
             nt = F.first(obs_t, ignorenulls=True).over(w_fwd)
             frac = (t - pt) / (nt - pt)
             v = F.coalesce(obs, pv + (nv - pv) * frac)
-        out = out.withColumn(c, v)
-    return out.withColumn("filled", filled_flag).select(
-        *key_cols, bucket_col, *value_cols, "filled"
+        return v.alias(c)
+
+    # one projection: each DataFrame step is a JVM analysis of the whole plan
+    return rows.select(
+        *keys, bucket.alias(bucket_col), *map(fill, value_cols),
+        filled_flag.alias("filled"),
     )

@@ -750,8 +750,8 @@ def ivf_search_index(
     """
     cent_rows = sorted(
         (r["ivf_list"], r["centroid"])
-        for r in spark.read.parquet(
-            *catalog.partition_paths("ivf_centroids", ["all"])
+        for r in catalog.read_partitions(
+            spark, "ivf_centroids", ["all"]
         ).collect()
     )
     centroids = np.asarray([c for _, c in cent_rows], dtype=np.float64)
@@ -767,12 +767,13 @@ def ivf_search_index(
     probed = sorted(
         {r["ivf_list"] for r in qb.select("ivf_list").distinct().collect()}
     )
-    paths = catalog.partition_paths("ivf_postings", [str(p) for p in probed])
-    if not paths:
+    cb = catalog.read_partitions(
+        spark, "ivf_postings", [str(p) for p in probed]
+    )
+    if cb is None:
         raise FileNotFoundError(
             f"ivf index has no postings for probed lists {probed}"
         )
-    cb = spark.read.parquet(*paths)
     scored = (
         cb.join(qb, on="ivf_list")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -892,16 +893,16 @@ def build_ivfpq_index(
 def _load_ivfpq_geometry(spark, catalog) -> tuple[np.ndarray, np.ndarray, bool]:
     cent_rows = sorted(
         (r["ivf_list"], r["centroid"])
-        for r in spark.read.parquet(
-            *catalog.partition_paths("ivfpq_centroids", ["all"])
+        for r in catalog.read_partitions(
+            spark, "ivfpq_centroids", ["all"]
         ).collect()
     )
     centroids = np.asarray([c for _, c in cent_rows], dtype=np.float64)
     m = int(catalog.table_property("ivfpq_postings", "ivfpq_m"))
     ksub = int(catalog.table_property("ivfpq_postings", "ivfpq_ksub"))
     residual = bool(catalog.table_property("ivfpq_postings", "ivfpq_residual"))
-    book_rows = spark.read.parquet(
-        *catalog.partition_paths("ivfpq_books", ["all"])
+    book_rows = catalog.read_partitions(
+        spark, "ivfpq_books", ["all"]
     ).collect()
     dsub = len(book_rows[0]["vals"])
     books = np.empty((m, ksub, dsub))
@@ -931,11 +932,11 @@ def extend_ivfpq_index(
     affected = sorted(
         r["ivf_list"] for r in new_codes.select("ivf_list").distinct().collect()
     )
-    existing = catalog.partition_paths(
-        "ivfpq_postings", [str(a) for a in affected]
+    existing = catalog.read_partitions(
+        spark, "ivfpq_postings", [str(a) for a in affected]
     )
     merged = new_codes
-    if existing:
+    if existing is not None:
         # MERGE on vec_id, not blind append: stored rows whose id arrives
         # again are REPLACED, so replaying an already-committed batch (the
         # foreachBatch at-least-once edge) and re-crawled vectors that
@@ -945,8 +946,7 @@ def extend_ivfpq_index(
         # pass or rebuild (documented; same trade Iceberg MERGE makes when
         # the partition key itself changes).
         old = (
-            spark.read.parquet(*existing)
-            .select(*new_codes.columns)
+            existing.select(*new_codes.columns)
             .join(new_codes.select("vec_id"), on="vec_id", how="left_anti")
         )
         merged = old.unionByName(new_codes)
@@ -997,13 +997,14 @@ def ivfpq_search_index(
     probed = sorted(
         {r["ivf_list"] for r in q.select("ivf_list").distinct().collect()}
     )
-    paths = catalog.partition_paths("ivfpq_postings", [str(p) for p in probed])
-    if not paths:
+    cb = catalog.read_partitions(
+        spark, "ivfpq_postings", [str(p) for p in probed]
+    )
+    if cb is None:
         raise FileNotFoundError(
             f"ivfpq index has no postings for probed lists {probed} — "
             "extend the index before searching"
         )
-    cb = spark.read.parquet(*paths)
     joined = cb.join(F.broadcast(q), on="ivf_list").filter(
         F.col("vec_id") != F.col("query_id")
     )

@@ -19,7 +19,6 @@ At 10^12-point scale this is the difference between scanning a 1m tier
 from __future__ import annotations
 
 import datetime as dt
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,6 +65,30 @@ def _partitions_in_range(
     return parts
 
 
+def _read_range(
+    spark: SparkSession, catalog: TableCatalog, table: str,
+    start: dt.datetime | None, end: dt.datetime | None,
+    as_of: int | str | None = None,
+) -> DataFrame:
+    """``table``'s committed day partitions overlapping [start, end),
+    manifest-pruned and read with the snapshot's recorded schema."""
+    parts = _partitions_in_range(catalog, table, start, end, as_of=as_of)
+    if not parts:
+        raise ValueError(f"no committed {table} partitions in range")
+    return catalog.read_partitions(spark, table, parts, as_of=as_of)
+
+
+def _between(
+    df: DataFrame, col: str, start: dt.datetime | None, end: dt.datetime | None
+) -> DataFrame:
+    """Rows of ``df`` whose ``col`` lies in [start, end) (None: unbounded)."""
+    if start is not None:
+        df = df.filter(F.col(col) >= F.lit(start))
+    if end is not None:
+        df = df.filter(F.col(col) < F.lit(end))
+    return df
+
+
 def read_rollup(
     spark: SparkSession,
     catalog: TableCatalog,
@@ -86,16 +109,10 @@ def read_rollup(
     dirs the old manifest references stay on disk until
     ``expire_snapshots`` reclaims them."""
     tier = tier or select_tier(width_seconds)
-    table = f"rollup_{tier}"
-    parts = _partitions_in_range(catalog, table, start, end, as_of=as_of)
-    if not parts:
-        raise ValueError(f"no committed {table} partitions in range")
-    paths = catalog.partition_paths(table, parts, as_of=as_of)
-    df = spark.read.parquet(*paths)
-    if start is not None:
-        df = df.filter(F.col("bucket") >= F.lit(start))
-    if end is not None:
-        df = df.filter(F.col("bucket") < F.lit(end))
+    df = _between(
+        _read_range(spark, catalog, f"rollup_{tier}", start, end, as_of),
+        "bucket", start, end,
+    )
     secs = F.unix_timestamp(F.col("bucket").cast("timestamp"))
     out_bucket = F.timestamp_seconds(
         (secs - (secs % width_seconds)).cast("long")
@@ -144,16 +161,10 @@ def read_candles(
             "cannot be split across output buckets; choose a dividing "
             "width or build a finer ohlc tier"
         )
-    table = f"ohlc_{tier}"
-    parts = _partitions_in_range(catalog, table, start, end, as_of=as_of)
-    if not parts:
-        raise ValueError(f"no committed {table} partitions in range")
-    paths = catalog.partition_paths(table, parts, as_of=as_of)
-    df = spark.read.parquet(*paths)
-    if start is not None:
-        df = df.filter(F.col("bucket") >= F.lit(start))
-    if end is not None:
-        df = df.filter(F.col("bucket") < F.lit(end))
+    df = _between(
+        _read_range(spark, catalog, f"ohlc_{tier}", start, end, as_of),
+        "bucket", start, end,
+    )
     secs = F.unix_timestamp(F.col("bucket").cast("timestamp"))
     out_bucket = F.timestamp_seconds(
         (secs - (secs % width_seconds)).cast("long")
@@ -215,13 +226,10 @@ def stitch_tier_frames(
             # skip the scan entirely (its children keep themselves: the
             # parent-usable test is vacuously false)
             continue
-        df = spark.read.parquet(
-            *catalog.partition_paths(f"rollup_{tier}", parts[tier])
+        df = _between(
+            catalog.read_partitions(spark, f"rollup_{tier}", parts[tier]),
+            "bucket", start, end,
         )
-        if start is not None:
-            df = df.filter(F.col("bucket") >= F.lit(start))
-        if end is not None:
-            df = df.filter(F.col("bucket") < F.lit(end))
         e = F.unix_timestamp(F.col("bucket").cast("timestamp"))
         keep = _stitch_usable(e, w, width_seconds, start_e, end_e)
         pw = parent[tier]
@@ -314,10 +322,7 @@ def read_series(
     """
     from influxer_spark.operators.gorilla import decode_series_df
 
-    parts = _partitions_in_range(catalog, table, start, end)
-    if not parts:
-        raise ValueError(f"no committed {table} partitions in range")
-    enc = spark.read.parquet(*catalog.partition_paths(table, parts))
+    enc = _read_range(spark, catalog, table, start, end)
     pts = decode_series_df(enc)
     out = pts.select(
         *[
@@ -327,11 +332,7 @@ def read_series(
         F.col("ts").alias("bucket"),
         F.col("value").alias("v"),
     )
-    if start is not None:
-        out = out.filter(F.col("bucket") >= F.lit(start))
-    if end is not None:
-        out = out.filter(F.col("bucket") < F.lit(end))
-    return out
+    return _between(out, "bucket", start, end)
 
 
 def read_count_series(
@@ -351,10 +352,7 @@ def read_count_series(
     narrow mapInPandas decode, no shuffle."""
     from influxer_spark.operators.intcodec import decode_int_series_df
 
-    parts = _partitions_in_range(catalog, table, start, end)
-    if not parts:
-        raise ValueError(f"no committed {table} partitions in range")
-    enc = spark.read.parquet(*catalog.partition_paths(table, parts))
+    enc = _read_range(spark, catalog, table, start, end)
     pts = decode_int_series_df(enc)
     out = pts.select(
         *[
@@ -364,11 +362,7 @@ def read_count_series(
         F.col("ts").alias("bucket"),
         F.col("value").alias("cnt"),
     )
-    if start is not None:
-        out = out.filter(F.col("bucket") >= F.lit(start))
-    if end is not None:
-        out = out.filter(F.col("bucket") < F.lit(end))
-    return out
+    return _between(out, "bucket", start, end)
 
 
 def read_exact_rollup(
@@ -395,10 +389,7 @@ def read_exact_rollup(
     decode), one groupBy on (keys, bucket) — no join between archives."""
     from influxer_spark.operators.intcodec import decode_int2_series_df
 
-    parts = _partitions_in_range(catalog, table, start, end, as_of=as_of)
-    if not parts:
-        raise ValueError(f"no committed {table} partitions in range")
-    enc = spark.read.parquet(*catalog.partition_paths(table, parts, as_of=as_of))
+    enc = _read_range(spark, catalog, table, start, end, as_of)
     pts = decode_int2_series_df(enc, blob_col="blob", blob2_col="sum_blob")
     w = F.lit(int(width_seconds)).cast("long")
     epoch = F.unix_timestamp("ts").cast("long")
@@ -412,11 +403,7 @@ def read_exact_rollup(
         F.col("v2").alias("sum_cents"),
         F.col("ts"),
     )
-    if start is not None:
-        out = out.filter(F.col("ts") >= F.lit(start))
-    if end is not None:
-        out = out.filter(F.col("ts") < F.lit(end))
-    agg = out.groupBy(*key_cols, "bucket").agg(
+    agg = _between(out, "ts", start, end).groupBy(*key_cols, "bucket").agg(
         F.sum("cnt").alias("cnt"),
         F.sum("sum_cents").alias("sum_cents"),
     )
@@ -466,19 +453,13 @@ def read_quantile(
         raise ValueError(
             f"given bounds differ from {table}'s pinned hist_bounds"
         )
-    parts = _partitions_in_range(catalog, table, start, end)
-    if not parts:
-        raise ValueError(f"no committed {table} partitions in range")
-    df = spark.read.parquet(*catalog.partition_paths(table, parts))
+    df = _read_range(spark, catalog, table, start, end)
     if "hist" not in df.columns:
         raise ValueError(
             f"{table} has no 'hist' column — run the pipeline with "
             "hist_bounds= to materialize quantile histograms"
         )
-    if start is not None:
-        df = df.filter(F.col("bucket") >= F.lit(start))
-    if end is not None:
-        df = df.filter(F.col("bucket") < F.lit(end))
+    df = _between(df, "bucket", start, end)
     secs = F.unix_timestamp(F.col("bucket").cast("timestamp"))
     out_bucket = F.timestamp_seconds(
         (secs - (secs % width_seconds)).cast("long")
@@ -532,14 +513,9 @@ def read_distinct(
             raise ValueError(f"{table} pins no kmv_k property and none given")
     elif pinned is not None and int(k) != int(pinned):
         raise ValueError(f"given k={k} differs from {table}'s pinned kmv_k={pinned}")
-    parts = _partitions_in_range(catalog, table, start, end)
-    if not parts:
-        raise ValueError(f"no committed {table} partitions in range")
-    df = spark.read.parquet(*catalog.partition_paths(table, parts))
-    if start is not None:
-        df = df.filter(F.col("bucket") >= F.lit(start))
-    if end is not None:
-        df = df.filter(F.col("bucket") < F.lit(end))
+    df = _between(
+        _read_range(spark, catalog, table, start, end), "bucket", start, end
+    )
     keys = list(key_cols)
     merged = KMV.kmv_rebucket(df, keys, width_seconds, int(k))
     return KMV.kmv_estimate(merged, keys, int(k))
@@ -586,14 +562,9 @@ def read_percentile(
             f"given sub_bits={sub_bits} differs from {table}'s pinned "
             f"hdr_sub_bits={pinned}"
         )
-    parts = _partitions_in_range(catalog, table, start, end)
-    if not parts:
-        raise ValueError(f"no committed {table} partitions in range")
-    df = spark.read.parquet(*catalog.partition_paths(table, parts))
-    if start is not None:
-        df = df.filter(F.col("bucket") >= F.lit(start))
-    if end is not None:
-        df = df.filter(F.col("bucket") < F.lit(end))
+    df = _between(
+        _read_range(spark, catalog, table, start, end), "bucket", start, end
+    )
     keys = list(key_cols)
     merged = H.hdr_rebucket(df, keys, width_seconds)
     return H.hdr_quantiles(merged, keys, ps, int(sub_bits))
@@ -716,15 +687,9 @@ def read_sliding(
         if start is not None
         else None
     )
-    parts = _partitions_in_range(catalog, table, warm_start, end)
-    if not parts:
-        raise ValueError(f"no committed {table} partitions in range")
-    df = spark.read.parquet(*catalog.partition_paths(table, parts))
-    if warm_start is not None:
-        df = df.filter(F.col("bucket") >= F.lit(warm_start))
-    if end is not None:
-        df = df.filter(F.col("bucket") < F.lit(end))
+    df = _between(
+        _read_range(spark, catalog, table, warm_start, end),
+        "bucket", warm_start, end,
+    )
     out = rollup_sliding(df, list(key_cols), window_seconds // tier_s, tier_s)
-    if start is not None:
-        out = out.filter(F.col("bucket") >= F.lit(start))
-    return out
+    return _between(out, "bucket", start, None)

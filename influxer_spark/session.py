@@ -10,6 +10,14 @@ Scale posture (100 TB / 1000-executor design, tested on local[N]):
   Arrow-vectorized per BASELINE.json input_hint: "no per-row Python").
 - shuffle.partitions sized to cores locally; on a real cluster this is
   superseded by AQE coalescing from an intentionally-high initial value.
+- PySpark's per-call origin capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``).  With it on,
+  every ``pyspark.sql.functions`` call walks the Python stack and makes
+  extra py4j round trips (active session, conf read, origin set and clear)
+  to record its call site; planning one InfluxQL statement makes hundreds
+  of such calls.  The only loss is the Python call-site "DataFrame query
+  context" in Spark runtime errors; the engine's own errors
+  (``InfluxQLError``) do not use it.
 """
 
 from __future__ import annotations
@@ -67,6 +75,7 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # metastore-backed (bucketed) tables land outside the repo
         .config(
             "spark.sql.warehouse.dir",

@@ -1313,9 +1313,7 @@ def _q_export_shards(spark, sf_dir):
     shards = SA.export_shards(
         spark, cat, docs, "doc_id", docs_per_shard=64, seed="shards"
     )
-    back = spark.read.parquet(
-        *cat.partition_paths("train_shards", shards)
-    )
+    back = cat.read_partitions(spark, "train_shards", shards)
     return back.groupBy("shard_idx").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("sum_chars"),

@@ -6,7 +6,11 @@ import datetime as dt
 
 import pytest
 
-from influxer_spark.operators.gapfill import gapfill_interpolate, gapfill_locf
+from influxer_spark.operators.gapfill import (
+    fill_buckets,
+    gapfill_interpolate,
+    gapfill_locf,
+)
 
 
 @pytest.fixture(scope="module")
@@ -57,3 +61,57 @@ def test_spine_is_dense_per_series(spark):
     out = gapfill_interpolate(df, ["key"], "v", "1d")
     assert out.count() == 3
     assert out.filter("filled").count() == 1
+
+
+def test_null_key_series_keeps_its_observed_buckets(spark):
+    """A NULL series key is one more series: its observed buckets stay
+    observed and only its gap is filled, in every mode."""
+    rows = [
+        (None, dt.datetime(2024, 1, 1, 0, 0), 1.0),
+        (None, dt.datetime(2024, 1, 1, 0, 2), 3.0),
+        ("k", dt.datetime(2024, 1, 1, 0, 0), 5.0),
+    ]
+    df = spark.createDataFrame(rows, "key string, bucket timestamp, v double")
+    want_gap = {"null": None, "previous": 1.0, "linear": 2.0, "value": 0.0}
+    for mode, gap in want_gap.items():
+        out = fill_buckets(df, ["key"], ["v"], 60, mode=mode, fill_value=0.0)
+        got = {(r["key"], r["bucket"].minute): (r["v"], r["filled"])
+               for r in out.collect()}
+        assert got == {
+            (None, 0): (1.0, False),
+            (None, 1): (gap, True),
+            (None, 2): (3.0, False),
+            ("k", 0): (5.0, False),
+        }, mode
+
+
+def test_all_null_aggregate_is_observed_not_a_gap(spark):
+    """The _hit marker: a bucket whose aggregate is NULL was observed, so
+    fill(value) must not overwrite it."""
+    rows = [
+        ("k", dt.datetime(2024, 1, 1, 0, 0), 1.0),
+        ("k", dt.datetime(2024, 1, 1, 0, 1), None),
+        ("k", dt.datetime(2024, 1, 1, 0, 3), 4.0),
+    ]
+    df = spark.createDataFrame(rows, "key string, bucket timestamp, v double")
+    out = fill_buckets(df, ["key"], ["v"], 60, mode="value", fill_value=-1.0)
+    got = {r["bucket"].minute: (r["v"], r["filled"]) for r in out.collect()}
+    assert got == {0: (1.0, False), 1: (None, False), 2: (-1.0, True),
+                   3: (4.0, False)}
+
+
+def test_spine_bounds_pin_the_range_and_drop_outside_buckets(spark):
+    rows = [
+        ("k", dt.datetime(2024, 1, 1, 0, 0), 1.0),
+        ("k", dt.datetime(2024, 1, 1, 0, 2), 3.0),
+    ]
+    df = spark.createDataFrame(rows, "key string, bucket timestamp, v double")
+    out = fill_buckets(
+        df, ["key"], ["v"], 60, mode="previous",
+        spine_bounds=(dt.datetime(2024, 1, 1, 0, 1),
+                      dt.datetime(2024, 1, 1, 0, 4)),
+    )
+    got = {r["bucket"].minute: (r["v"], r["filled"]) for r in out.collect()}
+    # minute 0 lies before the pinned range; minute 1 has nothing to carry
+    assert got == {1: (None, True), 2: (3.0, False), 3: (3.0, True),
+                   4: (3.0, True)}

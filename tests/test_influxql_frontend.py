@@ -162,6 +162,29 @@ def test_fill_spine_pinned_to_where_range(m):
     assert out.count() == 10
 
 
+def test_fill_keeps_a_null_tag_series_observed_buckets(spark):
+    """A point without the GROUP BY tag forms its own series (InfluxDB's
+    empty tag value): fill() fills only that series' gaps and keeps its
+    observed buckets, exactly like fill(none) shows them."""
+    pts = spark.createDataFrame(
+        [(None, T0, 1.0), (None, T0 + dt.timedelta(minutes=2), 3.0)],
+        "tag string, ts timestamp, value double",
+    )
+    base = "SELECT mean(value) AS v FROM m GROUP BY time(1m), tag"
+
+    def run(q):
+        out = influxql(q, {"m": pts}).orderBy("time").collect()
+        return [(r["time"].minute, r["tag"], r["v"]) for r in out]
+
+    assert run(base) == [(0, None, 1.0), (2, None, 3.0)]
+    assert run(base + " fill(0)") == [
+        (0, None, 1.0), (1, None, 0.0), (2, None, 3.0)
+    ]
+    assert run(base + " fill(previous)") == [
+        (0, None, 1.0), (1, None, 1.0), (2, None, 3.0)
+    ]
+
+
 # --- raw transforms / selectors / limit ---
 
 def test_raw_transform_drops_all_null_rows(m):

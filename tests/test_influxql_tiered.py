@@ -34,6 +34,41 @@ def _engines(points, cat):
     return raw, tiered
 
 
+def _assert_route(eng, q, df, table):
+    """Pin both the plan and the physical read of statement ``q``, whose
+    executed frame is ``df``: EXPLAIN's route row serves it from ``table``,
+    and ``df`` reads only that table's files, plus raw ones when the route
+    has a raw tail.  ``table=None``: the route is raw and ``df`` reads no
+    tier file."""
+    row = eng.execute(f"EXPLAIN {q}").collect()[0]["plan"]
+    roots = {cfg["catalog"].root for cfg in eng.tiered.values()}
+    files = df.inputFiles()
+    tier = [f for f in files if any(r in f for r in roots)]
+    if table is None:
+        assert row.startswith("route: raw — "), row
+        assert not tier, tier
+        return
+    assert row.startswith("route: ") and f" — {table}, " in row, row
+    assert tier and all(f"/{table}/" in f for f in tier), files
+    if "raw tail from" not in row:
+        assert tier == files, files
+
+
+@pytest.fixture
+def executed(monkeypatch):
+    """(engine, statement) of every InfluxQLEngine.execute call, so a test
+    can pin the route of a statement a gate query runs internally."""
+    calls = []
+    real = InfluxQLEngine.execute
+
+    def execute(self, sql):
+        calls.append((self, sql))
+        return real(self, sql)
+
+    monkeypatch.setattr(InfluxQLEngine, "execute", execute)
+    return calls
+
+
 def test_tier_served_matches_raw_recompute(built):
     points, cat = built
     raw, tiered = _engines(points, cat)
@@ -266,12 +301,11 @@ def test_approx_distinct_tier_matches_raw_path(built, spark):
     got_df = tiered.execute(q_tier)
     got = {(r["time"], r["metric"]): r["uu"] for r in got_df.collect()}
     assert got == want and len(got) > 10
-    files = got_df.inputFiles()
-    assert files and all("kmv_1h" in f for f in files)  # tier, not raw
+    _assert_route(tiered, q_tier, got_df, "kmv_1h")  # tier, not raw
 
     # explicit k ≠ pinned build k falls back to raw (never a silent mix)
     fb = tiered.execute(q_raw)
-    assert not any("kmv_1h" in f for f in fb.inputFiles())
+    _assert_route(tiered, q_raw, fb, None)
 
 
 def test_realtime_tail_serves_fresh_data(spark, sf_dir):
@@ -708,6 +742,8 @@ def test_expired_tier_served_from_integer_archive(spark, tmp_path_factory):
 
     cold = {tuple(r[:2]): (r["c"], r["s"]) for r in eng.execute(q).collect()}
     assert cold.keys() == hot.keys() and len(cold) > 5  # archive answers
+    # the archive fallback plans without a Spark job, like the tier routes
+    assert _jobs_during(spark, lambda: eng.execute(q)) == []
     for k, (c, sv) in cold.items():
         hc, hs = hot[k]
         assert c == hc  # counts are exact integers through the archive
@@ -920,7 +956,51 @@ def test_explain_prints_the_route(built_hdr, spark):
         "EXPLAIN ANALYZE SELECT count(value) FROM pages GROUP BY time(1d), lang"
     ).collect()
     assert rows[0]["plan"].startswith("route: raw")
+    assert rows[1]["plan"].startswith("exec_ms: ")
+    assert int(rows[1]["plan"][len("exec_ms: "):]) >= 0
     assert rows[-1]["plan"].startswith("rows: ")
+
+
+def _jobs_during(spark, fn):
+    """Ids of the Spark jobs launched while ``fn`` runs."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs launched during a probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_tier_served_execute_launches_no_job(built_hdr, spark):
+    """Planning a tier-served statement runs no Spark job: tier reads
+    project the schema the manifest recorded instead of sampling parquet
+    footers, so execute() on the rollup, stitched and hdr routes returns
+    without one (the archive fallback is pinned in
+    test_expired_tier_served_from_integer_archive)."""
+    assert _jobs_during(spark, lambda: spark.range(3).count())  # probe works
+    _, cat = built_hdr
+    eng = InfluxQLEngine({}, ts_col="warc_ts")
+    eng.register_tiered("pages", cat, key_cols=("url", "metric"), hdr=True)
+    for q, family in (
+        ("SELECT mean(value) FROM pages GROUP BY time(4h), metric", "rollup"),
+        ("SELECT count(value) FROM pages GROUP BY time(90m), metric",
+         "stitched"),
+        ("SELECT median(value) FROM pages GROUP BY time(4h), metric", "hdr"),
+    ):
+        assert _jobs_during(spark, lambda: eng.execute(q)) == [], q
+        route = eng.execute(f"EXPLAIN {q}").collect()[0]["plan"]
+        assert route.startswith(f"route: {family} — "), route
+
+
+def test_sessions_turn_pyspark_origin_capture_off(spark):
+    """get_spark() turns off PySpark's per-call origin capture, which costs
+    several py4j round trips on every pyspark.sql.functions call."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
 def test_sub_minute_offset_falls_back_to_raw(built):
@@ -1106,7 +1186,7 @@ def test_tz_dst_days_match_raw(spark, tmp_path):
            for r in got_df.collect()}
     assert got == want and len(got) > 0
     # inputFiles is truncation-proof where the plan's Location string is not
-    assert any("rollup_1h" in f for f in got_df.inputFiles())
+    _assert_route(tiered, q, got_df, "rollup_1h")
     # the 23-hour wall day really has fewer points per series
     mar10 = [v for (t, k), v in got.items() if str(t).startswith("2024-03-10")]
     mar09 = [v for (t, k), v in got.items() if str(t).startswith("2024-03-09")]
@@ -1151,7 +1231,7 @@ def test_tz_fill_dst_day_tier_matches_raw(spark, tmp_path):
         got_df = tiered.execute(q)
         got = {tuple(r[:2]): (r[2], rnd(r[3])) for r in got_df.collect()}
         assert got == want and len(got) > 0, mode
-        assert any("rollup_1h" in f for f in got_df.inputFiles()), mode
+        _assert_route(tiered, q, got_df, "rollup_1h")
         # the spine covers the WHERE range, gaps included, minus the
         # nonexistent spring-forward hour: 71 wall labels × 2 series
         assert len(got) == 71 * 2, mode
@@ -1247,8 +1327,7 @@ def test_tz_percentile_served_from_hdr_tier(built_hdr):
         " GROUP BY time(1d), metric tz('America/New_York')"
     )
     df = tiered.execute(q)
-    assert any("hdr_1h" in f for f in df.inputFiles())
-    assert not any("hdr_1d" in f for f in df.inputFiles())
+    _assert_route(tiered, q, df, "hdr_1h")  # never hdr_1d
     got = {tuple(r[:2]): r["p95"] for r in df.collect()}
 
     spark = points.sparkSession
@@ -1264,11 +1343,11 @@ def test_tz_hdr_half_hour_zone_falls_back_to_raw(built_hdr):
     points, cat = built_hdr
     tiered = InfluxQLEngine({"pages": points}, ts_col="warc_ts")
     tiered.register_tiered("pages", cat, key_cols=("url", "metric"), hdr=True)
-    df = tiered.execute(
+    q = (
         "SELECT percentile(value, 95) AS p95 FROM pages"
         " GROUP BY time(1d), metric tz('Asia/Kolkata')"
     )
-    assert not any("hdr_" in f for f in df.inputFiles())
+    _assert_route(tiered, q, tiered.execute(q), None)
 
 
 def test_tz_approx_distinct_tier_matches_raw_path(built, spark):
@@ -1300,19 +1379,21 @@ def test_tz_approx_distinct_tier_matches_raw_path(built, spark):
     got_df = tiered.execute(q_tier)
     got = {(r["time"], r["metric"]): r["uu"] for r in got_df.collect()}
     assert got == want and len(got) > 0
-    files = got_df.inputFiles()
-    assert files and all("kmv_1h" in f for f in files)
+    _assert_route(tiered, q_tier, got_df, "kmv_1h")
 
     # half-hour zone: no 1m sketch tier → raw path (identical by purity)
-    fb = tiered.execute(
+    q_fb = (
         "SELECT approx_count_distinct(url) AS uu FROM pages"
         " GROUP BY time(1d), metric tz('Asia/Kolkata')"
     )
-    assert not any("kmv_" in f for f in fb.inputFiles())
+    fb = tiered.execute(q_fb)
+    _assert_route(tiered, q_fb, fb, None)
     assert fb.count() > 0
 
 
-def test_tz_fill_gate_query_tier_serves_and_matches_duckdb(spark, sf_dir):
+def test_tz_fill_gate_query_tier_serves_and_matches_duckdb(
+    spark, sf_dir, executed
+):
     """The influxql_tz_fill_tier_6h gate query really serves from the 1h
     tier (not raw) AND matches its DuckDB oracle at sf0.001 — the r5
     tz()+fill serving path value-proved locally before the driver sees
@@ -1325,7 +1406,7 @@ def test_tz_fill_gate_query_tier_serves_and_matches_duckdb(spark, sf_dir):
     )
 
     df = influxql_queries()["influxql_tz_fill_tier_6h"](spark, sf_dir)
-    assert any("rollup_1h" in f for f in df.inputFiles())
+    _assert_route(*executed[-1], df, "rollup_1h")
     got = sorted(
         (r["bucket"], r["event_type"], r["cnt"], r["mn"])
         for r in df.collect()
@@ -1345,7 +1426,9 @@ def test_tz_fill_gate_query_tier_serves_and_matches_duckdb(spark, sf_dir):
     assert any(c == 0 for (_, _, c, _) in got)
 
 
-def test_tz_offset_gate_query_tier_serves_and_matches_duckdb(spark, sf_dir):
+def test_tz_offset_gate_query_tier_serves_and_matches_duckdb(
+    spark, sf_dir, executed
+):
     """influxql_tz_offset_tier_6h1h really serves from the 1h tier and
     matches its DuckDB oracle at sf0.001 — r5 tz()+offset serving
     value-proved locally before the driver sees it."""
@@ -1357,7 +1440,7 @@ def test_tz_offset_gate_query_tier_serves_and_matches_duckdb(spark, sf_dir):
     )
 
     df = influxql_queries()["influxql_tz_offset_tier_6h1h"](spark, sf_dir)
-    assert any("rollup_1h" in f for f in df.inputFiles())
+    _assert_route(*executed[-1], df, "rollup_1h")
     got = sorted(tuple(r) for r in df.collect())
     con = duckdb.connect()
     con.execute(
@@ -1405,14 +1488,13 @@ def test_approx_distinct_offset_grid_serves_from_tier(built, spark):
     got = {(r["time"], r["metric"]): r["uu"] for r in got_df.collect()}
     assert got == want and len(got) > 10
     assert all(t.hour % 4 == 1 for (t, _m) in got)  # grid really shifted
-    files = got_df.inputFiles()
-    assert files and all("kmv_1h" in f for f in files)
+    _assert_route(tiered, q_tier, got_df, "kmv_1h")
     # sub-hour offset: no sketch tier divides it → raw
-    fb = tiered.execute(
+    q_fb = (
         "SELECT approx_count_distinct(url) AS uu FROM pages "
         "GROUP BY time(4h, 30m), metric"
     )
-    assert not any("kmv_1h" in f for f in fb.inputFiles())
+    _assert_route(tiered, q_fb, tiered.execute(q_fb), None)
 
 
 def test_hdr_percentile_offset_grid_serves_from_tier(built_hdr):
@@ -1429,7 +1511,7 @@ def test_hdr_percentile_offset_grid_serves_from_tier(built_hdr):
         " GROUP BY time(6h, 1h), metric"
     )
     df = tiered.execute(q)
-    assert any("hdr_1h" in f for f in df.inputFiles())
+    _assert_route(tiered, q, df, "hdr_1h")
     got = {tuple(r[:2]): r["p95"] for r in df.collect()}
     assert len(got) > 0 and all(t.hour % 6 == 1 for (t, _m) in got)
 
@@ -1441,14 +1523,15 @@ def test_hdr_percentile_offset_grid_serves_from_tier(built_hdr):
     assert got == want
 
 
-def test_kmv_offset_gate_query_serves_from_sketch_tier(spark, sf_dir):
+def test_kmv_offset_gate_query_serves_from_sketch_tier(
+    spark, sf_dir, executed
+):
     """kmv_offset_tier_4h1h really reads the kmv_1h sketch tier (KMV
     purity makes tier ≡ raw in VALUE, so the route needs its own pin)."""
     from influxer_spark.influxql_queries import influxql_queries
 
     df = influxql_queries()["kmv_offset_tier_4h1h"](spark, sf_dir)
-    files = df.inputFiles()
-    assert files and all("kmv_1h" in f for f in files)
+    _assert_route(*executed[-1], df, "kmv_1h")
     rows = df.collect()
     assert len(rows) > 0
     assert all(r["bucket"].hour % 4 == 1 for r in rows)
@@ -1480,8 +1563,7 @@ def test_kmv_day_width_hour_bounds_fall_to_raw(built, spark):
     )
     got_df = tiered.execute(q_hour)
     # falls all the way to raw (default k), never mis-filters kmv_1d
-    files = got_df.inputFiles()
-    assert not any("kmv_1d" in f or "kmv_1h" in f for f in files)
+    _assert_route(tiered, q_hour, got_df, None)
     want = {tuple(r[:2]): r[2] for r in raw.execute(q_hour).collect()}
     got = {tuple(r[:2]): r[2] for r in got_df.collect()}
     assert got == want and len(got) > 0
@@ -1493,7 +1575,7 @@ def test_kmv_day_width_hour_bounds_fall_to_raw(built, spark):
     )
     day_df = tiered.execute(q_day)
     if cat.exists("kmv_1d"):
-        assert any("kmv_1d" in f for f in day_df.inputFiles())
+        _assert_route(tiered, q_day, day_df, "kmv_1d")
     want2 = {
         tuple(r[:2]): r[2]
         for r in raw.execute(q_day.replace("(url)", "(url, 32)")).collect()
@@ -1502,14 +1584,15 @@ def test_kmv_day_width_hour_bounds_fall_to_raw(built, spark):
     assert got2 == want2 and len(got2) > 0
 
 
-def test_hdr_offset_gate_query_serves_from_sketch_tier(spark, sf_dir):
+def test_hdr_offset_gate_query_serves_from_sketch_tier(
+    spark, sf_dir, executed
+):
     """hdr_offset_tier_6h1h really reads the hdr_1h sketch tier, and the
     offset grid shows in the output labels."""
     from influxer_spark.influxql_queries import influxql_queries
 
     df = influxql_queries()["hdr_offset_tier_6h1h"](spark, sf_dir)
-    files = df.inputFiles()
-    assert files and all("hdr_1h" in f for f in files)
+    _assert_route(*executed[-1], df, "hdr_1h")
     rows = df.collect()
     assert len(rows) > 0
     assert all(r["bucket"].hour % 6 == 1 for r in rows)

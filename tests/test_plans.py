@@ -66,6 +66,30 @@ def test_gapfill_windows_share_one_sort(plans):
     assert between.count("Window") >= 2
 
 
+def test_tier_fill_spine_reuses_the_series_partitioning(spark, sf_dir, tmp_path):
+    """A tier-served GROUP BY time() fill(previous) costs two exchanges: the
+    re-bucketing aggregate and fill's one per-series aggregate.  The LOCF
+    window runs on that aggregate's partitioning, with no exchange of its
+    own and no join."""
+    from influxer_spark.catalog import TableCatalog
+    from influxer_spark.influxql_frontend import InfluxQLEngine
+    from influxer_spark.operators.refresh import build_point_tiers
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumnRenamed(
+        "event_type", "metric"
+    )
+    cat = TableCatalog(str(tmp_path / "cat"))
+    build_point_tiers(spark, cat, ev, "ts", ["metric"], "value")
+    eng = InfluxQLEngine({}, ts_col="ts")
+    eng.register_tiered("m", cat, key_cols=("metric",))
+    q = "SELECT mean(value) FROM m GROUP BY time(5m), metric fill(previous)"
+    route = eng.execute(f"EXPLAIN {q}").collect()[0]["plan"]
+    assert route.startswith("route: rollup — rollup_1m, "), route
+    plan = _fmt(spark, eng.execute(q))
+    assert len(re.findall(r"^\s*\(\d+\) Exchange", plan, re.M)) == 2, plan
+    assert "Join" not in plan, plan
+
+
 def test_day_filter_pushes_to_scan(spark, tmp_path):
     path = generate_pages(str(tmp_path), n_rows=2000, seed=42, days=3)
     pages = spark.read.parquet(path)
